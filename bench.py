@@ -1,23 +1,21 @@
 #!/usr/bin/env python
-"""Benchmark: run the suite's headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
-ONE JSON line: {"metric", "value" (total sec), "unit", "queries", "sf"}.
+"""Benchmark: run every suite entry at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data, see SF_DIR) and print ONE JSON line on stdout:
+{"metric", "value" (total sec), "unit", "queries", "sf"}.
 
-Each query is forced to full materialization via the noop sink (no
-driver collect — measures the distributed plan, not toPandas).
+This is the driver's headline line plus a per-entry work ledger, not
+the regression gate. End-to-end regressions are judged by
+``perfbench/`` (seeded workloads with fixed bounds, see
+BENCHMARK.json). Per-entry regressions are judged from the work
+counters this run writes to ``bench_detail_sf<sf>.json``: the jobs,
+stages, executor CPU seconds and shuffle MB of each entry's best rep,
+read from Spark's status store. Those counters barely move with host
+load, while a full sweep's wall total swings 10-25 s between windows
+of one day on a shared host.
 
-CROSS-ROUND TOTALS ARE NOT A REGRESSION SIGNAL (measured rule,
-perf_ab_r13.md seven-sweep table): with the registry order swapped
-in/out across seven same-day sf0.1 sweeps, ORDER moved the total
-<=1.5 s while the HOST WINDOW moved it 10-25 s (same-order spans of
-140.5-164.3 s within one day; quiet plateau 143-145 s vs the prior
-day's 136.7 s vs the all-time 0.01 %-steal 119.98 s record). A
-round-over-round total delta is therefore window noise until proven
-otherwise. Regression adjudication uses (a) the per-entry ratchet
-(bench_reference_sf*.json, floors only tighten), and (b) same-day
-matched-pair sweeps on comparable steal_pct windows — never another
-day's total. tools/quiet_sweep.py is the committed launch/acceptance
-protocol behind every committed sidecar."""
+Each entry runs REPS times, forced to full materialization via the
+noop sink (no driver collect — measures the distributed plan, not
+toPandas), and records its best rep."""
 
 from __future__ import annotations
 
@@ -26,29 +24,26 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO_DIR)
 
 from miba_2023_capstone_rb_nlp_spark.session import get_spark  # noqa: E402
 from miba_2023_capstone_rb_nlp_spark.suite import load_suite  # noqa: E402
+from perfbench.spans import SparkStatus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-# best-of-N per query: single-run timings on a shared box carry multi-
-# second GC/load spikes on random queries, and the first reps of a
-# query pay its codegen compile — which C2-finishes only after
-# several invocations (round 9 measured the flagship flat at rep 2-3
-# and cliffing at rep 4), so the base is 4 reps and the adaptive
-# loop below (see WARMING_IMPROVEMENT) extends any entry whose
-# newest rep is still improving
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "4"))
 
-SKIP: set[str] = set()
+# best-of-N per entry: the first reps of an entry pay its codegen
+# compile, which finishes C2 compilation only after a few invocations
+# (the flagship was measured flat at reps 2-3 and at its plateau from
+# rep 4), and single reps on a shared host carry GC/load spikes
+REPS = 4
 
-# The driver records only the LAST 2000 chars of stdout; round 2's
-# 67-query JSON line ran 2044 chars and lost its head, so the artifact
-# failed to parse. Keep the line safely under the window: compact
-# separators, 2-decimal timings, and — only if still too long — fold
-# the last-registered (lowest-priority) entries into one "_folded"
-# aggregate, regardless of their cost.
+# The driver records only the LAST 2000 chars of stdout; a 2044-char
+# line once lost its head and failed to parse. Keep the line safely
+# under the window: compact separators, 2-decimal timings, and — only
+# if still too long — fold the last-registered (lowest-priority)
+# entries into one "_folded" aggregate, regardless of their cost.
 LINE_BUDGET = 1900
 
 # fold key: leading underscore cannot collide with a registry entry
@@ -56,92 +51,11 @@ LINE_BUDGET = 1900
 # prefixes; enforced at fold time below)
 FOLD_KEY = "_folded"
 
-# Like-for-like guard: per-query times from the newest driver-recorded
-# BENCH_r*.json artifact with a parsed payload (bench_baseline.json is
-# the fallback when no artifact parses). Any query ≥1.5× slower AND
-# ≥0.5 s absolute is flagged on stderr unless its name carries an
-# inline justification here.
-_REPO_DIR = os.path.dirname(os.path.abspath(__file__))
-BASELINE_FILE = os.path.join(_REPO_DIR, "bench_baseline.json")
-
-
-def _valid_payload(payload, sf_val) -> dict[str, float] | None:
-    """Accept a baseline only if it is shaped right AND was recorded
-    at the SAME scale factor as this run — cross-sf comparisons are
-    meaningless (the r1/r2 vs r3+ testdata differ ~10×)."""
-    if not isinstance(payload, dict):
-        return None
-    if str(payload.get("sf")) != str(sf_val):
-        return None
-    qs = payload.get("queries")
-    if not isinstance(qs, dict) or not qs:
-        return None
-    clean = {k: v for k, v in qs.items()
-             if isinstance(v, (int, float)) and not isinstance(v, bool)}
-    return clean or None
-
 
 def detail_sidecar_path(sf_val) -> str:
-    """Per-sf sidecar with EVERY entry's per-rep timings — including
-    the ones the stdout line folds into "_folded" (VERDICT r6 #8), so
-    round-over-round per-entry comparison never loses half the suite
-    to the 1900-char line budget."""
+    """Per-sf sidecar with EVERY entry's reps, best and work ledger —
+    including the entries the stdout line folds into "_folded"."""
     return os.path.join(_REPO_DIR, f"bench_detail_sf{sf_val}.json")
-
-
-def reference_path(sf_val) -> str:
-    """Per-sf RATCHET of per-entry historical bests: a committed
-    ``{entry: best_sec}`` map, min-updated after every completed run.
-    It exists because the detail sidecar records ONE run — a noisy run
-    (e.g. the driver's r10 artifact, recorded under a co-tenant burst)
-    overwrites a quiet one, and the retime trigger then compares
-    against inflated numbers and misses real inflation. The ratchet
-    can only tighten, so the most optimistic committed evidence is
-    never lost to a bad recording window.
-
-    Maintenance rule: when an entry's plan is DELIBERATELY made more
-    expensive (it computes more than it used to, as the r11 witness
-    conversions did), delete its key in the same commit — the ratchet
-    re-seeds from the next run; otherwise the retime pass burns budget
-    every run chasing a best the new code cannot reach."""
-    return os.path.join(_REPO_DIR, f"bench_reference_sf{sf_val}.json")
-
-
-def _reference_queries(sf_val) -> dict[str, float] | None:
-    try:
-        with open(reference_path(sf_val)) as f:
-            payload = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    if not isinstance(payload, dict):
-        return None
-    clean = {
-        k: float(v)
-        for k, v in payload.items()
-        if isinstance(v, (int, float)) and not isinstance(v, bool)
-    }
-    return clean or None
-
-
-def update_reference(sf_val, timings: dict[str, float],
-                     live_entries) -> dict[str, float]:
-    """Ratchet the committed reference with this run's bests: per
-    entry min(existing, this run), seeding entries the file has never
-    seen. Keys whose entry left the registry are pruned (a renamed
-    entry must not pin a stale floor forever). Returns what was
-    written."""
-    ref = _reference_queries(sf_val) or {}
-    merged: dict[str, float] = {
-        k: v for k, v in ref.items() if k in live_entries
-    }
-    for k, v in timings.items():
-        if k == FOLD_KEY:
-            continue
-        merged[k] = round(min(merged[k], v), 3) if k in merged else round(v, 3)
-    with open(reference_path(sf_val), "w") as f:
-        json.dump(merged, f, indent=1, sort_keys=True)
-        f.write("\n")
-    return merged
 
 
 def _proc_stat_snapshot() -> list[int] | None:
@@ -157,14 +71,12 @@ def _proc_stat_snapshot() -> list[int] | None:
 
 def host_window_stats(start: list[int] | None,
                       end: list[int] | None) -> dict:
-    """Host telemetry over a recording window, for the sidecar: every
-    round's noise adjudication (perf_ab_r9/r10/r11.md) had to infer
-    co-tenant load forensically from rep spreads; recording steal%
-    and idle% over the WHOLE run window makes it machine-readable —
-    a burst-inflated recording carries its own evidence. steal only
-    accrues while the guest wants CPU, so it understates contention
-    during idle stretches, but a loaded window still reads clearly
-    higher than a quiet one on the same suite."""
+    """Host telemetry over the recording window: load average, host
+    cores, and steal%/idle% from /proc/stat deltas, so a run recorded
+    under co-tenant load carries its own evidence. steal only accrues
+    while the guest wants CPU, so it understates contention during
+    idle stretches, but a loaded window still reads clearly higher
+    than a quiet one on the same suite."""
     out: dict = {}
     try:
         out["loadavg_1m"] = round(os.getloadavg()[0], 2)
@@ -180,509 +92,62 @@ def host_window_stats(start: list[int] | None,
     return out
 
 
-def _sidecar_queries(sf_val) -> dict[str, float] | None:
-    try:
-        with open(detail_sidecar_path(sf_val)) as f:
-            payload = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    qs = payload.get("queries")
-    if not isinstance(qs, dict):
-        return None
-    clean = {
-        k: v["best"]
-        for k, v in qs.items()
-        if isinstance(v, dict)
-        and isinstance(v.get("best"), (int, float))
-        and not isinstance(v["best"], bool)
+def session_setup(spark, folded: list[str]) -> dict:
+    """What actually ran, read from the live session rather than the
+    host: ``cpus`` in the host block counts the machine's cores, which
+    says nothing about the master's parallelism. ``folded`` names the
+    entries the stdout line folded, so two runs compare fold to fold."""
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "folded": folded,
     }
-    return clean or None
 
 
-def _baseline_queries(sf_val) -> dict[str, float] | None:
-    """Newest parseable same-sf BENCH_r*.json beats the static
-    fallback — the guard then always compares against the latest round
-    without a manual refresh. (Driver round names are zero-padded, so
-    lexicographic sort orders rounds correctly.) Entries the stdout
-    line folded (absent from the artifact) are backfilled from the
-    committed detail sidecar, so the regression table covers the FULL
-    suite (VERDICT r6 #8)."""
-    import glob
-
-    best: dict[str, float] | None = None
-    for path in sorted(glob.glob(os.path.join(_REPO_DIR, "BENCH_r*.json")),
-                       reverse=True):
-        try:
-            with open(path) as f:
-                artifact = json.load(f)
-            qs = _valid_payload(
-                artifact.get("parsed") if isinstance(artifact, dict) else None,
-                sf_val,
-            )
-            if qs:
-                best = qs
-                break
-        except (OSError, json.JSONDecodeError):
-            continue
-    if best is None:
-        try:
-            with open(BASELINE_FILE) as f:
-                best = _valid_payload(json.load(f), sf_val)
-        except (OSError, json.JSONDecodeError):
-            best = None
-    side = _sidecar_queries(sf_val)
-    if side:
-        merged = dict(side)
-        if best:
-            merged.update({k: v for k, v in best.items() if k != FOLD_KEY})
-        return merged
-    return best
-REGRESSION_RATIO = 1.5
-REGRESSION_ABS_SEC = 0.5
-JUSTIFIED_REGRESSIONS: dict[str, str] = {
-    # name -> one-line reason, e.g. "recall fix: scores real candidates"
-    "pca_coords": (
-        "witness-oracled since r11 (VERDICT r10 #4): the entry now "
-        "verifies its own output (reconstruction/orthonormality/"
-        "variance witnesses over the fitted result) — strictly more "
-        "computation than the old rows-only coordinate dump it is "
-        "being compared against; the fit/transform plan itself is "
-        "unchanged (also: one-pass PCA rewrite r4 — per-fresh-plan "
-        "Catalyst/codegen overhead dominates at this sf, amortized "
-        "to zero at real scale)"
-    ),
-    "kmeans_clusters": (
-        "witness-oracled since r11 (VERDICT r10 #4): the entry now "
-        "derives law-of-total-variance / size / exact-decimal tss "
-        "witnesses from the real assignment (one extra exploded "
-        "moment pass over the persisted labels) on top of the fit "
-        "the old rows-only dump timed — a deliberate ~0.8s cost for "
-        "its first value-level driver check"
-    ),
-    "wizard_full_chain": (
-        "witness-oracled mid-r11 (the registry's LAST rows-only "
-        "conversion): the entry now verifies the chain's viz table — "
-        "assignment-invariant totals (Σ cluster sizes, size-weighted "
-        "sentiment) the DuckDB oracle recomputes, per-cluster/row "
-        "invariants, and a corpus-membership probe — on top of the "
-        "8-stage chain the old rows-only dump timed. The ~+2 s at "
-        "sf0.1 is per-job fixed overhead of the witness aggregates "
-        "(6 tiny exchanges over ≤10 rows), amortized to zero at real "
-        "scale; the chain portion itself is unchanged (interleaved "
-        "same-session A/B: old 4.72 s vs new 6.92 s on the same "
-        "host; ratchet floor reseeded from the new code per the "
-        "reference_path maintenance rule)"
-    ),
-    "top_terms_per_source": (
-        "profiled r5 solo at ~1.0s steady (vs 0.53s r3 baseline): the "
-        "plan is unchanged and already the target shape (pinned "
-        "WindowGroupLimit partial top-k + map-side partial aggs, 2 "
-        "exchanges); the delta is fixed per-stage task overhead at "
-        "tiny data on a noisy box, not a data-scaling cost"
-    ),
-}
-
-# Entries whose plan was DELIBERATELY made more expensive AND whose
-# ratchet floor was reseeded from the new code in the same commit
-# (the reference_path maintenance rule). Only these take the
-# ratchet-only retime yardstick below — a justified-but-plan-
-# unchanged entry (top_terms_per_source) keeps the protective
-# min-merge, because for it an old sidecar/artifact best is still a
-# best the CURRENT code can reach.
-#
-# ADVICE r11 #3 hazard, closed: until the reseeded floor tightens
-# below a burst-inflated reseed value, inflation on these entries
-# would be invisible to the retime pass — so the reseed-time floor is
-# RECORDED HERE per sf (r11 quiet-host values, commit 3032bcd's
-# sweep), and the yardstick is min(live ratchet, recorded floor): a
-# regenerated-or-looser ratchet file can never raise the bar above
-# what the reseed commit itself measured. _retime_reference warns
-# when the live ratchet is looser than the record (the file was
-# rebuilt without this history).
-#
-# Maintenance rule (mirrors reference_path's): a FUTURE justified
-# reseed of one of these entries must update its recorded floors in
-# the SAME commit — otherwise min(live, recorded) pins the old,
-# no-longer-reachable floor and every sweep burns retime reps on it
-# while mis-warning "lost history".
-RATCHET_RESEEDED: dict[str, dict[float, float]] = {
-    "kmeans_clusters": {0.1: 1.922, 0.01: 1.74},
-    "pca_coords": {0.1: 1.342, 0.01: 1.09},
-    "wizard_full_chain": {0.1: 5.515, 0.01: 5.825},
-}
-
-# Reseed provenance (VERDICT r12 #6): the commit whose quiet-host
-# sweep recorded each entry's reseed floors above, as DATA rather
-# than prose, so an audit can diff a floor against its source sweep
-# directly. A future reseed must update this alongside the floors.
-RATCHET_RESEED_COMMITS: dict[str, str] = {
-    "kmeans_clusters": "3032bcd",
-    "pca_coords": "3032bcd",
-    "wizard_full_chain": "3032bcd",
-}
-
-# Runs a reseeded entry's live ratchet may stay at-or-above its
-# recorded floor before the watch warns (see check_reseed_watch).
-RESEED_WATCH_RUNS = int(os.environ.get("SPARK_GRAFT_RESEED_WATCH_RUNS", "3"))
-
-# Reseed floors re-verified on a quiet host AFTER the reseed,
-# PER SCALE FACTOR (entry → {sf: evidence file}). A verified floor
-# that simply sits at the entry's true cost will never be beaten by
-# the ratchet — warning about it every run would train the operator
-# to ignore the watch, so verification silences it AT THAT SF ONLY:
-# floors are recorded per sf and verified per sf (an sf0.1
-# adjudication says nothing about the sf0.01 floor, which stays
-# under watch). Adding an entry REQUIRES the named evidence —
-# quiet-host reps (solo or in-sweep) plus a provenance adjudication —
-# recorded in a committed perf_ab file.
-RESEED_FLOOR_VERIFIED: dict[str, dict[float, str]] = {
-    # r13, sf0.1: both floors were recorded by the 0.01 %-steal
-    # 3032bcd sweep (the quietest window in repo history, all-time
-    # bests suite-wide) — a floor set on the quietest record cannot
-    # be burst-inflated. Solo fresh-JVM reps (perf_ab_r13.md) confirm
-    # both plans are JIT-warmup-dominated, so only an equally quiet
-    # in-sweep window can beat them; the ratchet keeps trying.
-    # r14, sf0.01 (VERDICT r13 next-round #3): same adjudication for
-    # the sf0.01 floors, which came from the same 3032bcd sweep —
-    # two fresh same-day sf0.01 sweeps (perf_ab_r14.md; the quiet one
-    # at 0.22 % steal) both landed kmeans ~2.15 s / pca ~1.51 s /
-    # wizard ~7.0 s, well above the 1.74/1.09/5.825 records, with
-    # rep-1-dominated JIT profiles: the floors ARE the quietest-
-    # window cost, not burst inflation. pca_coords is included — the
-    # first sf0.01 watch sidecar counted it alongside the named two.
-    "kmeans_clusters": {0.1: "perf_ab_r13.md", 0.01: "perf_ab_r14.md"},
-    "pca_coords": {0.01: "perf_ab_r14.md"},
-    "wizard_full_chain": {0.1: "perf_ab_r13.md", 0.01: "perf_ab_r14.md"},
-}
+def timed_rep(status: SparkStatus, action) -> tuple[float, dict]:
+    """Run ``action`` once; return its wall seconds and its work
+    ledger: the jobs and stages it started, and the executor CPU
+    seconds and shuffle read+write MB of those stages. Spark work is
+    synchronous under an action, so the stage ids allocated between
+    the two watermarks are exactly this rep's; the status store is
+    read after the timed region, once the listener bus has drained."""
+    stage0, job0, _ = status.marks()
+    t0 = time.perf_counter()
+    action()
+    wall = time.perf_counter() - t0
+    stage1, job1, _ = status.marks()
+    status.drain()
+    cpu = shuffle = 0.0
+    for sid in range(stage0, stage1):
+        st = status.stage(sid)
+        if st:
+            cpu += st["cpu_s"]
+            shuffle += st["shuffle_mb"]
+    return wall, {
+        "jobs": job1 - job0,
+        "stages": stage1 - stage0,
+        "cpu_s": round(cpu, 3),
+        "shuffle_mb": round(shuffle, 3),
+    }
 
 
-def reseed_watch_path(sf_val) -> str:
-    return os.path.join(_REPO_DIR, f"bench_reseed_watch_sf{sf_val}.json")
-
-
-def check_reseed_watch(sf_val, merged_ratchet: dict[str, float]) -> dict[str, dict]:
-    """The residual RATCHET_RESEEDED blind spot, made visible
-    (VERDICT r12 #6): a reseed floor recorded under load stays the
-    retime yardstick until the live ratchet tightens BELOW it — and
-    until then, real inflation underneath the inflated floor is
-    invisible to the retime pass. This counter tracks, per reseeded
-    entry and sf, how many completed runs the live ratchet has failed
-    to tighten below the recorded floor; at RESEED_WATCH_RUNS it
-    warns that the floor itself may be burst-inflated and needs a
-    solo quiet-host recheck. A run that beats the floor clears the
-    counter (the min() yardstick now self-corrects), and an entry in
-    RESEED_FLOOR_VERIFIED is exempt — its floor was re-measured quiet
-    and simply IS the entry's cost. State lives in a committed per-sf
-    sidecar so the count survives across rounds and hosts; each count
-    is stamped with the floor it counted against, so a future
-    justified reseed (which CHANGES the recorded floor) resets the
-    count instead of inheriting the old floor's failures and warning
-    spuriously about a one-run-old floor."""
-    path = reseed_watch_path(sf_val)
-    # salvage per entry: one malformed record must not reset every
-    # healthy entry's accumulated count (a blanket except here would
-    # silently restart ALL watches on a single corrupt row)
-    state: dict[str, dict] = {}
-    try:
-        with open(path) as f:
-            raw = json.load(f)
-    except (OSError, ValueError):
-        raw = {}
-    if isinstance(raw, dict):
-        for k, v in raw.items():
-            try:
-                state[k] = {"n": int(v["n"]), "floor": float(v["floor"])}
-            except (ValueError, TypeError, KeyError):
-                print(
-                    f"reseed watch: discarding malformed record for "
-                    f"{k!r}: {v!r}",
-                    file=sys.stderr,
-                )
-    out: dict[str, dict] = {}
-    for k, by_sf in RATCHET_RESEEDED.items():
-        recorded = by_sf.get(sf_val)
-        if recorded is None or sf_val in RESEED_FLOOR_VERIFIED.get(k, {}):
-            continue
-        live = merged_ratchet.get(k)
-        if live is not None and live < recorded:
-            continue  # ratchet tightened below the record: watch over
-        prev = state.get(k)
-        n = prev["n"] if prev and prev["floor"] == recorded else 0
-        out[k] = {"n": n + 1, "floor": recorded}
-        if out[k]["n"] >= RESEED_WATCH_RUNS:
-            print(
-                f"reseed floor for {k!r} ({recorded}s at sf={sf_val}, "
-                f"commit {RATCHET_RESEED_COMMITS.get(k, 'unrecorded')}) "
-                f"has not been beaten in {out[k]['n']} completed runs "
-                "— if the reseed sweep itself ran under load, "
-                "inflation below that floor is invisible to the "
-                "retime pass; re-verify with interleaved solo reps on "
-                "a quiet host and record the adjudication in "
-                "RESEED_FLOOR_VERIFIED",
-                file=sys.stderr,
-            )
-    try:
-        with open(path, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-            f.write("\n")
-    except OSError as e:
-        print(f"reseed watch write failed: {e!r}", file=sys.stderr)
-    return out
-
-
-def report_regressions(timings: dict[str, float], sf_val) -> None:
-    """Print the baseline-vs-now regression table to stderr (stdout is
-    reserved for the single JSON artifact line)."""
-    base = _baseline_queries(sf_val)
-    if base is None:
-        print("bench baseline unavailable for this sf; skipping "
-              "regression check", file=sys.stderr)
-        return
-    rows = []
-    for name, now in timings.items():
-        was = base.get(name)
-        if was is None or was <= 0:
-            continue
-        if now / was >= REGRESSION_RATIO and now - was >= REGRESSION_ABS_SEC:
-            rows.append((name, was, now, now / was,
-                         JUSTIFIED_REGRESSIONS.get(name, "UNEXPLAINED")))
-    if not rows:
-        print("regression check: clean vs baseline", file=sys.stderr)
-        return
-    print(f"{'query':35s} {'base':>7s} {'now':>7s} ratio  why", file=sys.stderr)
-    for name, was, now, ratio, why in sorted(rows, key=lambda r: -r[3]):
-        print(f"{name:35s} {was:7.2f} {now:7.2f} {ratio:5.2f}x {why}",
-              file=sys.stderr)
-
-
-# an entry whose POST-WARMUP rep spread exceeds this is "noisy": its
-# best-of-N is still recorded, but the burst is machine-visible in
-# the sidecar instead of only prose (VERDICT r6 #2). The first rep is
-# excluded from the noise metric — it systematically pays one-time
-# codegen compilation and cache fill (measured 1.5-6× across the
-# suite), which is warmup, not co-tenant burst; the all-reps spread
-# is still recorded separately so the warmup factor stays visible.
-NOISY_SPREAD = 1.3
-
-# End-of-run solo retime (VERDICT r10 #1): the r10 driver artifact
-# recorded uniform ~1.8-2.9× inflation on dozens of UNTOUCHED cheap
-# entries — a transient co-tenant phase overlapping part of the
-# sweep (the same-round quiet-host sidecar showed zero noisy
-# entries). Best-of-N within the entry's own time window cannot see
-# past a burst that outlives the window, so after the full sweep any
-# entry whose best still exceeds its committed reference by
-# >RETIME_RATIO (and >RETIME_ABS_SEC absolute) is re-timed with a
-# few extra reps — by then the burst has usually passed, and the min
-# over ALL reps is recorded. Honest by construction: extra quiet
-# samples can only tighten the estimate, every retime rep lands in
-# the sidecar rep list, and a persisting burst changes nothing. The
-# pass is budgeted so a genuinely loaded host can't stall the run.
-RETIME_RATIO = 1.5
-RETIME_ABS_SEC = 0.3
-RETIME_REPS = 3
-# Budget sizing: the r11 run-3 sweep (185 s, recorded mid-burst)
-# retimed 20 entries for a ≥102 s spend against looser floors; with
-# the ratchet now ~16% tighter a fully-loaded run triggers more
-# entries, so the default leaves headroom. Worst case it adds ~5 min
-# to an already-inflated run; the worst-ratio-first ordering makes
-# the marginal dollar always go to the worst offender.
-RETIME_BUDGET_SEC = float(os.environ.get("SPARK_GRAFT_RETIME_BUDGET", "300"))
-
-# Most still-inflated entries whose retime reps ride the stdout tail
-# line (the full lists always land in the sidecar): 6 × ~65 chars
-# stays well inside LINE_BUDGET with everything else folded.
-RETIMES_TAIL_MAX = 6
-
-
-def _retime_reference(sf_val) -> dict[str, float]:
-    """Per-entry reference for the retime trigger: the MIN of the
-    committed historical ratchet (reference_path), the detail sidecar
-    and the newest driver artifact — the most optimistic committed
-    record, so a burst-inflated artifact (r10) cannot hide inflation
-    by becoming the yardstick, and a burst-inflated SIDECAR (the r10
-    driver run overwrote the quiet one) cannot either. Retiming a
-    fast entry is cheap; missing an inflated one costs the round.
-
-    Exception: a RATCHET_RESEEDED entry had its cost DELIBERATELY
-    raised (witness conversions) and its ratchet reseeded from the
-    new code per the maintenance rule — but old sidecars/artifacts
-    still carry the cheaper plan's timings, so the min-merge would
-    flag it every run forever (the r11 sweeps burned 3 retime reps
-    on kmeans_clusters each run this way). For those entries the
-    reseeded ratchet alone is the yardstick; a justified-but-
-    unchanged-plan entry keeps the min-merge, since its old bests
-    are still reachable."""
-    # capture the ratchet ONCE and reuse it for the reseed override
-    # (ADVICE r11 #4: re-reading the file inside the loop)
-    ratchet = _reference_queries(sf_val) or {}
-    refs: dict[str, float] = {}
-    for src in (
-        ratchet,  # the historical ratchet
-        _sidecar_queries(sf_val),
-        _baseline_queries(sf_val),
-    ):
-        for k, v in (src or {}).items():
-            if k == FOLD_KEY:
-                continue
-            refs[k] = min(refs[k], v) if k in refs else v
-    for k, recorded_by_sf in RATCHET_RESEEDED.items():
-        if k not in refs:
-            continue
-        live = ratchet.get(k)
-        recorded = recorded_by_sf.get(sf_val)
-        candidates = [v for v in (live, recorded) if v is not None]
-        if not candidates:
-            continue  # no post-reseed evidence at this sf; keep min-merge
-        refs[k] = min(candidates)
-        if live is not None and recorded is not None and live > recorded:
-            print(
-                f"ratchet for reseeded entry {k!r} ({live}s) is looser "
-                f"than its recorded reseed floor ({recorded}s) — the "
-                "ratchet file lost history; using the recorded floor",
-                file=sys.stderr,
-            )
-    return refs
-
-
-def retime_inflated(t: float, ref: float | None) -> bool:
-    """THE inflation definition — both legs, shared by the retime
-    trigger and the still-inflated tail so they cannot drift apart
-    again (ADVICE r12 #1 was exactly that drift: the tail kept a
-    ratio-only copy after the trigger gained the absolute leg)."""
-    return (
-        ref is not None
-        and ref > 0
-        and t >= ref * RETIME_RATIO
-        and t - ref >= RETIME_ABS_SEC
-    )
-
-
-def select_still_inflated(
-    inflated: list[str],
-    timings: dict[str, float],
-    refs: dict[str, float],
-    details: dict[str, dict],
-) -> list[str]:
-    """Entries still inflated AFTER their solo retime, by the SAME
-    predicate as the retime trigger (retime_inflated). Worst ratio
-    first, matching the retime pass's own ordering."""
-    return sorted(
-        (
-            name
-            for name in inflated
-            if details[name].get("retimed")
-            and retime_inflated(timings[name], refs.get(name))
-        ),
-        key=lambda n: -(timings[n] / refs[n]),
-    )
-
-# Adaptive reps (VERDICT r7 #6): an entry whose post-warmup spread
-# exceeds NOISY_SPREAD after the base REPS gets extra reps (up to
-# MAX_REPS total) so its best-of-N is trustworthy on a bursty box —
-# a co-tenant spike during a 3-rep window otherwise leaves a noisy
-# "best" that the regression table then mis-reads as a slowdown.
-# Entries that are quiet after REPS pay nothing.
-MAX_REPS = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS", "6"))
-
-# Sub-second entries get a deeper budget (VERDICT r9 #4): their noise
-# is dominated by fixed scheduling jitter (~0.1-0.3 s), so the RATIO
-# threshold over-flags them — all 10 of round-9's noisy entries were
-# sub-second. More quiet samples, not a looser threshold, is the
-# honest fix: each extra rep costs <1 s by construction, and the
-# quiet-spread metric is unchanged.
-SUBSEC_CUTOFF = 1.0
-MAX_REPS_SUBSEC = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_REPS_SUBSEC", "10"))
-
-
-def rep_budget_of(rs: list[float]) -> int:
-    """Total-rep budget for an entry given its samples so far: the
-    standard MAX_REPS, deepened for sub-second entries whose jitter
-    needs more samples to find 3 agreeing quiet reps."""
-    if rs and min(rs) < SUBSEC_CUTOFF:
-        return max(MAX_REPS, MAX_REPS_SUBSEC)
-    return MAX_REPS
-
-# JIT-plateau extension (round 9): whole-stage-codegen classes C2-
-# compile only after enough invocations, and the threshold can land
-# BETWEEN reps — measured on the flagship at sf0.1 on a QUIET host:
-# reps 11.3 / 3.07 / 3.1 / 2.63 / 2.43 / 2.37, i.e. best-of-3 reads
-# the 3.1 s slope, not the 2.4 s plateau (the r8 "regression" that
-# round-9's interleaved A/B, perf_ab_r9.md, traced to exactly this +
-# host noise). So the base is 4 reps, and while the NEWEST rep still
-# improves on every earlier one by >5% the entry keeps sampling
-# (same MAX_REPS budget as the noise extension): a flat tail stops
-# immediately, a still-warming entry buys its way to steady state.
-WARMING_IMPROVEMENT = 1.05
-
-
-def still_warming_of(rs: list[float]) -> bool:
-    """True when the newest rep is the best so far by >5% — steady
-    state hasn't been reached, so one more sample is worth its cost."""
-    if len(rs) < 2 or rs[-1] <= 0:
-        return False
-    return min(rs[:-1]) / rs[-1] > WARMING_IMPROVEMENT
-
-
-def should_extend(rs: list[float]) -> bool:
-    """The main loop's single extension predicate (shared with the
-    tests so the production condition itself is what's pinned):
-    extend while under the MAX_REPS budget AND either the 3 quietest
-    post-warmup reps still disagree >NOISY_SPREAD (noise trigger) or
-    the newest rep is still improving >5% (JIT-plateau trigger).
-    Sub-second entries draw on the deeper MAX_REPS_SUBSEC budget."""
-    if len(rs) >= rep_budget_of(rs):
-        return False
-    qs = quiet_spread_of(rs)
-    return (qs is not None and qs > NOISY_SPREAD) or still_warming_of(rs)
-
-
-def warm_spread_of(rs: list[float]) -> float | None:
-    """Spread (max/min) of ALL post-warmup reps — the burst record.
-    Burst is only measurable with ≥2 post-warmup samples; with fewer
-    (REPS ≤ 2) the metric would just re-flag warmup."""
-    warm = rs[1:]
-    if len(warm) >= 2 and min(warm) > 0:
-        return round(max(warm) / min(warm), 2)
-    return None
-
-
-def quiet_spread_of(rs: list[float]) -> float | None:
-    """Spread of the 3 FASTEST post-warmup reps: judges whether the
-    recorded best is trustworthy. Unlike the all-warm spread (whose
-    max can never drop once a burst is recorded), this CAN fall as
-    extra quiet reps arrive — so it both terminates the adaptive
-    extension loop and defines the noisy flag consistently."""
-    quiet = sorted(rs[1:])[:3]
-    if len(quiet) >= 2 and min(quiet) > 0:
-        return round(max(quiet) / min(quiet), 2)
-    return None
-
-
-def encode_line(
-    timings: dict[str, float],
-    sf_val: float | str,
-    n_noisy: int = 0,
-    retimes: dict[str, dict] | None = None,
-) -> str:
+def encode_line(timings: dict[str, float],
+                sf_val: float | str) -> tuple[str, list[str]]:
+    """The driver's stdout line, and the names folded into FOLD_KEY
+    to keep it within LINE_BUDGET (in registry order)."""
     def dump(qs: dict[str, float]) -> str:
-        payload = {
-            "metric": "suite_total_runtime",
-            "value": round(sum(timings.values()), 2),
-            "unit": "sec",
-            "queries": {k: round(v, 2) for k, v in sorted(qs.items())},
-            "sf": sf_val,
-            # entries whose rep spread exceeded NOISY_SPREAD —
-            # per-entry spreads live in the detail sidecar
-            "noisy": n_noisy,
-        }
-        if retimes:
-            # VERDICT r11 #7: entries still >RETIME_RATIO over their
-            # committed floor AFTER the solo retime carry their retime
-            # rep list (and the floor) into the driver tail, so a
-            # future judge can adjudicate host noise from the
-            # artifact alone instead of needing the sidecar
-            payload["retimes"] = retimes
-        return json.dumps(payload, separators=(",", ":"))
+        return json.dumps(
+            {
+                "metric": "suite_total_runtime",
+                "value": round(sum(timings.values()), 2),
+                "unit": "sec",
+                "queries": {k: round(v, 2) for k, v in sorted(qs.items())},
+                "sf": sf_val,
+            },
+            separators=(",", ":"),
+        )
 
     assert FOLD_KEY not in timings, f"registry entry shadows {FOLD_KEY!r}"
     qs = dict(timings)
@@ -690,11 +155,13 @@ def encode_line(
     # fold the LAST-registered (lowest-priority) entries first; their
     # time still counts in "value" via the untouched `timings` sum
     fold_order = list(reversed(list(timings)))
-    folded = 0.0
+    folded: list[str] = []
+    total = 0.0
     while len(line) > LINE_BUDGET and fold_order:
         victim = fold_order.pop(0)
-        folded += qs.pop(victim)
-        qs[FOLD_KEY] = round(folded, 2)
+        folded.append(victim)
+        total += qs.pop(victim)
+        qs[FOLD_KEY] = round(total, 2)
         line = dump(qs)
     if len(line) > LINE_BUDGET:
         print(
@@ -702,19 +169,15 @@ def encode_line(
             "after folding every entry; driver tail window may truncate it",
             file=sys.stderr,
         )
-    return line
+    return line, folded[::-1]
 
 
-def main() -> None:
-    _host_t0 = _proc_stat_snapshot()
-    spark = get_spark(app_name="miba-bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    suite = load_suite()
-    # Warm the JVM so the first registry entries aren't charged for
-    # one-time session init: codegen pipeline, parquet datasource +
-    # footer reader, shuffle/AQE machinery, broadcast exchange, window
-    # exec, and the Python worker pool (reused afterwards). Each is a
-    # fixed per-JVM cost, not a property of any query's plan.
+def _warm_up(spark) -> None:
+    """Warm the JVM so the first registry entries aren't charged for
+    one-time session init: codegen pipeline, parquet datasource +
+    footer reader, shuffle/AQE machinery, broadcast exchange, window
+    exec, and the Python worker pool (reused afterwards). Each is a
+    fixed per-JVM cost, not a property of any query's plan."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -735,170 +198,64 @@ def main() -> None:
     nation.mapInPandas(lambda it: it, schema=nation.schema).write.format(
         "noop"
     ).mode("overwrite").save()
+
+
+def sf_of(sf_dir: str) -> float | str:
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
+def main() -> None:
+    host_t0 = _proc_stat_snapshot()
+    spark = get_spark(app_name="miba-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    status = SparkStatus(spark)
+    suite = load_suite()
+    _warm_up(spark)
     # iterate in registry-priority order (load_suite() puts the
     # driver-checked core first) so encode_line's fold-from-the-end
     # sacrifices the deprioritized twins, never a core entry
     timings: dict[str, float] = {}
     details: dict[str, dict] = {}
-
-    def entry_rep(q) -> float:
-        t0 = time.perf_counter()
-        q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     for name, q in suite.items():
-        if name in SKIP:
-            continue
-        def one_rep() -> float:
-            return entry_rep(q)
+        def action(q=q) -> None:
+            q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
-        reps: list[float] = [one_rep() for _ in range(max(1, REPS))]
-        # adaptive extension, two triggers sharing one MAX_REPS
-        # budget: (1) noisy after the base reps → keep sampling until
-        # the quietest samples agree ("noisy" in the sidecar then
-        # means "even the 3 quietest post-warmup reps disagree >1.3×
-        # after up to MAX_REPS", not "we only looked N times");
-        # (2) still-warming → the newest rep beat every earlier one
-        # by >5%, i.e. codegen hasn't hit its C2 plateau yet
-        while should_extend(reps):
-            reps.append(one_rep())
-        best = min(reps)
-        spread = max(reps) / best if best > 0 else 1.0
-        warm_spread = warm_spread_of(reps)
-        quiet_spread = quiet_spread_of(reps)
+        reps = [timed_rep(status, action) for _ in range(REPS)]
+        best, ledger = min(reps, key=lambda r: r[0])
         timings[name] = round(best, 3)
         details[name] = {
             "best": round(best, 3),
-            "reps": [round(r, 3) for r in reps],
-            "spread": round(spread, 2),
-            "warm_spread": warm_spread,
-            "quiet_spread": quiet_spread,
-            "noisy": quiet_spread is not None and quiet_spread > NOISY_SPREAD,
-            "extra_reps": max(0, len(reps) - max(1, REPS)),
+            "reps": [round(r[0], 3) for r in reps],
+            **ledger,
         }
         # Measurement hygiene between entries, OUTSIDE the timed
-        # region: suite queries persist fan-out bases (wizard chain)
-        # and leave shuffle files behind; letting caches pile up
-        # across 67×REPS runs turns late queries into GC/cleanup
-        # victims (measured multi-second spikes on queries that run
-        # ~1.5 s isolated). An explicit driver GC lets ContextCleaner
-        # reclaim shuffle state deterministically rather than
-        # mid-measurement.
+        # region: suite queries persist fan-out bases and leave
+        # shuffle files behind; letting caches pile up across the
+        # sweep turns late queries into GC/cleanup victims (measured
+        # multi-second spikes on queries that run ~1.5 s isolated).
+        # An explicit driver GC lets ContextCleaner reclaim shuffle
+        # state deterministically rather than mid-measurement.
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    sf_val = sf_of(SF_DIR)
+    line, folded = encode_line(timings, sf_val)
+    # the FULL per-entry record (fold-immune) — the stdout line keeps
+    # only what fits the driver's tail window; nothing here may cost
+    # the run its line
     try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
-    # ---- end-of-run solo retime (see RETIME_* above) ----------------
-    try:
-        refs = _retime_reference(sf_val)
-    except Exception as e:  # noqa: BLE001 - diagnostics must not kill the run
-        print(f"retime reference unavailable: {e!r}", file=sys.stderr)
-        refs = {}
-    inflated = sorted(
-        (
-            name
-            for name, t in timings.items()
-            if retime_inflated(t, refs.get(name))
-        ),
-        key=lambda n: -(timings[n] / refs[n]),
-    )
-    retime_spent = 0.0
-    for name in inflated:
-        if retime_spent >= RETIME_BUDGET_SEC:
-            print(
-                f"retime budget exhausted; skipped: {inflated[inflated.index(name):]}",
-                file=sys.stderr,
-            )
-            break
-        q = suite[name]
-        extra: list[float] = []
-        for _ in range(RETIME_REPS):
-            r = entry_rep(q)
-            extra.append(r)
-            retime_spent += r
-            if r <= refs[name] * 1.1:  # burst passed; estimate restored
-                break
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        d = details[name]
-        d["reps"].extend(round(r, 3) for r in extra)
-        d["retimed"] = len(extra)
-        rs = d["reps"]
-        best = min(rs)
-        timings[name] = round(best, 3)
-        d["best"] = round(best, 3)
-        d["spread"] = round(max(rs) / best, 2) if best > 0 else 1.0
-        d["warm_spread"] = warm_spread_of(rs)
-        d["quiet_spread"] = quiet_spread_of(rs)
-        d["noisy"] = (
-            d["quiet_spread"] is not None and d["quiet_spread"] > NOISY_SPREAD
-        )
-    if inflated:
-        print(
-            "solo-retimed (best vs committed reference >"
-            f"{RETIME_RATIO}x): "
-            + ", ".join(
-                f"{n}({details[n].get('retimed', 0)} reps -> "
-                f"{details[n]['best']}s)"
-                for n in inflated
-                if "retimed" in details[n]
-            ),
-            file=sys.stderr,
-        )
-    # entries STILL inflated after their solo retime (VERDICT r11 #7):
-    # their quiet-rep evidence goes into the tail artifact itself.
-    # Capped at the WORST offenders by ratio: a fleet-wide burst can
-    # leave dozens of sub-second entries inflated, and an unbounded
-    # retimes dict (~65 chars each) would outgrow LINE_BUDGET even
-    # after every query folds — corrupting the tail JSON is worse
-    # than omitting the mildest offenders (all reps stay in the
-    # sidecar regardless).
-    still_names = select_still_inflated(inflated, timings, refs, details)
-    # entries the budget-exhaustion break skipped are ALSO still
-    # inflated (they never got their retime reps) — they must count
-    # in the tail's _more, or a fleet-wide burst under-reports in
-    # exactly the scenario this field exists for
-    n_budget_skipped = sum(
-        1 for name in inflated if not details[name].get("retimed")
-    )
-    still_inflated = {
-        name: {
-            "reps": [
-                round(r, 2)
-                for r in details[name]["reps"][-details[name]["retimed"]:]
-            ],
-            "ref": round(refs[name], 2),
-        }
-        for name in still_names[:RETIMES_TAIL_MAX]
-    }
-    n_more = len(still_names) - len(still_inflated) + n_budget_skipped
-    if n_more:
-        still_inflated["_more"] = n_more
-    n_noisy = sum(1 for d in details.values() if d["noisy"])
-    line = encode_line(timings, sf_val, n_noisy, retimes=still_inflated or None)
-    # The regression table is diagnostics; NOTHING may stand between a
-    # finished suite run and the artifact line — a malformed baseline
-    # file must not cost the run (the driver only records stdout).
-    try:
-        report_regressions(timings, sf_val)
-    except Exception as e:  # noqa: BLE001 - diagnostics must not kill the run
-        print(f"regression check failed: {e!r}", file=sys.stderr)
-    # the FULL per-entry record (reps, spread, fold-immune) — the
-    # stdout line keeps only what fits the driver's tail window
-    try:
+        host = host_window_stats(host_t0, _proc_stat_snapshot())
+        host.update(session_setup(spark, folded))
         with open(detail_sidecar_path(sf_val), "w") as f:
             json.dump(
                 {
                     "sf": sf_val,
                     "total": round(sum(timings.values()), 2),
-                    "reps_per_entry": max(1, REPS),
-                    "noisy_threshold": NOISY_SPREAD,
-                    "host": host_window_stats(
-                        _host_t0, _proc_stat_snapshot()
-                    ),
+                    "reps_per_entry": REPS,
+                    "host": host,
                     "queries": details,
                 },
                 f,
@@ -906,35 +263,8 @@ def main() -> None:
                 sort_keys=True,
             )
             f.write("\n")
-        if n_noisy:
-            noisy = sorted(
-                (n for n, d in details.items() if d["noisy"]),
-                key=lambda n: -details[n]["quiet_spread"],
-            )
-            print(
-                "noisy entries (3 quietest post-warmup reps spread > "
-                f"{NOISY_SPREAD}x): "
-                + ", ".join(
-                    f"{n}({details[n]['quiet_spread']}x)" for n in noisy
-                ),
-                file=sys.stderr,
-            )
     except Exception as e:  # noqa: BLE001
         print(f"sidecar write failed: {e!r}", file=sys.stderr)
-    # ratchet the historical-best reference (can only tighten; prunes
-    # entries that left the registry) — diagnostics, never fatal
-    merged = None
-    try:
-        merged = update_reference(sf_val, timings, set(suite))
-    except Exception as e:  # noqa: BLE001
-        print(f"reference update failed: {e!r}", file=sys.stderr)
-    # separate try: a watch failure must not print the misleading
-    # "reference update failed" after the reference was written fine
-    try:
-        if merged is not None:
-            check_reseed_watch(sf_val, merged)
-    except Exception as e:  # noqa: BLE001
-        print(f"reseed watch failed: {e!r}", file=sys.stderr)
     # stop Spark BEFORE printing: the JSON line must be the absolute
     # last stdout so the driver's 2000-char tail window contains it
     spark.stop()

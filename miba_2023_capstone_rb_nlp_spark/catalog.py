@@ -205,13 +205,3 @@ def cpu_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = table(spark, sf_dir, name)
     return df.repartition(spark.sparkContext.defaultParallelism)
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` queries can
-    name them exactly like the DuckDB oracle does."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -17,14 +17,6 @@ from miba_2023_capstone_rb_nlp_spark.functions.numeric import fixed
 from miba_2023_capstone_rb_nlp_spark.functions.text import md5_long, word_ngrams
 
 
-def shingle_table(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (exploded)."""
-    return df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(F.array_distinct(word_ngrams(F.col(text_col), n))).alias("s"),
-    )
-
-
 # Upper bound on shared-shingle candidate pairs (Σ df·(df−1)/2 over
 # shingles) before the self-join is allowed to run. A hot "stop
 # shingle" appearing in m docs alone contributes m²/2 join rows; at

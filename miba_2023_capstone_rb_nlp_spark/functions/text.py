@@ -80,16 +80,6 @@ def md5_long(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, HASH_HEX_CHARS), 16, 10).cast("bigint")
 
 
-def md5_long56(c: Column) -> Column:
-    """First 56 bits of md5 as a non-negative BIGINT — the step hash
-    for Kirsch-Mitzenmacher double hashing: h_i = m1 + i*m2 stays
-    below 2^61 for i ≤ 15 (no BIGINT overflow in any engine).
-
-    Oracle mirror: CAST('0x' || substr(md5(x), 1, 14) AS BIGINT).
-    """
-    return F.conv(F.substring(F.md5(c), 1, 14), 16, 10).cast("bigint")
-
-
 def fingerprint(c: Column) -> Column:
     """Document fingerprint: 60-bit md5 of the exact text."""
     return md5_long(c)
@@ -134,18 +124,6 @@ def winnow_from_hashes(sh: Column, w: int = 4) -> Column:
     )
 
 
-def winnow_fingerprints(c: Column, n: int = 3, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer et al., SIGMOD'03):
-    any match of ≥ w+n-1 tokens shares a fingerprint.
-
-    Convenience single-expression form — ONLY for tiny inputs/tests:
-    the shingle hashes are inlined into the window lambda, so the md5
-    pass runs once per window. Hot paths must use the two-projection
-    form (:func:`shingle_hashes` then :func:`winnow_from_hashes`).
-    """
-    return winnow_from_hashes(shingle_hashes(c, n), w)
-
-
 # Language-ID marker sets (tiny stopword heuristics — the scalable
 # n-gram approach at 100 TB is the same shape: per-language token
 # scores, argmax).
@@ -156,18 +134,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "de": ("der", "die", "und", "das", "ist"),
     "zh": (),  # non-ascii script: no whitespace markers
 }
-
-
-def lang_scores(c: Column) -> dict[str, Column]:
-    """Marker-token hit count per language."""
-    t = tokens(c)
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        if markers:
-            out[lang] = F.size(F.filter(t, lambda x: x.isin(*markers)))
-        else:
-            out[lang] = F.lit(0)
-    return out
 
 
 def lang_id(c: Column) -> Column:

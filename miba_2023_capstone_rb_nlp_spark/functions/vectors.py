@@ -74,12 +74,3 @@ def dot_expanded(a: Column, b: Column, dim: int) -> Column:
     for i in range(1, dim):
         out = out + at(a, i) * at(b, i)
     return out
-
-
-def norm2_expanded(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_expanded(a, a, dim))
-
-
-def cosine_expanded(a: Column, b: Column, dim: int) -> Column:
-    denom = norm2_expanded(a, dim) * norm2_expanded(b, dim)
-    return F.when(denom != 0.0, dot_expanded(a, b, dim) / denom)

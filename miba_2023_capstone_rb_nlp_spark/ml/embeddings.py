@@ -46,11 +46,12 @@ def hash_embeddings(
     vector is a per-row statistic, so it folds inside one codegen
     projection — tokens encoded once as signed ints ±(bucket+1),
     bucket counts packed into the 8-bit fields of two bigint
-    accumulators (one per sign; rows over 255 tokens take a general
-    fold), then normalized. The old shape exploded the token stream,
-    shuffled per-id partial sums (ids are unique per row, so the
-    "partial" aggregation reduced nothing — the exchange carried one
-    row per input row), and JOINED the vectors back on id: at corpus
+    accumulators (one per sign; rows over 127 tokens, and every
+    ``dim > 8``, take a general fold), then normalized. The old
+    shape exploded the token stream, shuffled per-id partial sums
+    (ids are unique per row, so the "partial" aggregation reduced
+    nothing — the exchange carried one row per input row), and
+    JOINED the vectors back on id: at corpus
     scale that is a full shuffle plus a corpus-sized self-join for a
     value each row can compute alone. Bucket sums are exact integers
     (order-free), the norm accumulates left-assoc over s0..s{dim-1},
@@ -73,16 +74,16 @@ def hash_embeddings(
     # plan, O(1)-per-token kernel: pack the per-bucket counts into
     # the 8-bit fields of TWO bigint accumulators (one per sign), so
     # each token costs one compare + one table-lookup + one add.
-    # Exact while every bucket count fits 8 bits, which ``n_tokens ≤
-    # 255`` guarantees; longer rows take the r15 fold (CaseWhen only
-    # evaluates the branch taken). Bucket sums stay exact integer
+    # Exact while no count reaches the sign bit: at dim = 8 bucket 7
+    # sits at bits 56-63, so a count of 128 there is 2^63 and
+    # overflows under ANSI. ``n_tokens ≤ 127`` guarantees it; longer
+    # rows, and any dim > 8 (8 fields × 8 bits is exactly one
+    # bigint), take the r15 fold (CaseWhen only evaluates the branch
+    # taken). Bucket sums stay exact integer
     # sums either way — bit-identical vectors, untouched oracles.
     # Measured (same-session interleaved, sf0.1 documents, 5 reps):
     # fold min 0.723 s → packed min 0.612 s; diff rows 0 incl. a
-    # synthetic >255-token batch that exercises the fallback.
-    if dim > 8:  # 8 fields × 8 bits is exactly one bigint
-        raise ValueError("packed kernel supports dim <= 8")
-
+    # synthetic long-row batch that exercises the fallback.
     def hash60(tok: Column) -> Column:
         return md5_long(F.concat(F.lit(salt), tok)) if salt else md5_long(tok)
 
@@ -108,8 +109,6 @@ def hash_embeddings(
             .cast("int"),
         )
 
-    pow256 = F.lit([256**d for d in range(dim)]).cast("array<bigint>")
-
     def unpack(pos: Column, neg: Column) -> Column:
         return F.array(
             *[
@@ -122,6 +121,8 @@ def hash_embeddings(
         )
 
     def packed_sums(toks: Column) -> Column:
+        pow256 = F.lit([256**d for d in range(dim)]).cast("array<bigint>")
+
         def signed_pack(arr: Column, positive: bool) -> Column:
             pick = (lambda e: e > 0) if positive else (lambda e: e < 0)
             idx = (lambda e: e) if positive else (lambda e: -e)
@@ -155,7 +156,9 @@ def hash_embeddings(
         )
 
     def bucket_sums(toks: Column) -> Column:
-        return F.when(F.size(toks) <= 255, packed_sums(toks)).otherwise(
+        if dim > 8:
+            return fold_sums(toks)
+        return F.when(F.size(toks) <= 127, packed_sums(toks)).otherwise(
             fold_sums(toks)
         )
 

@@ -23,20 +23,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
-        .select(F.col("w.start").alias("w_start"), "n", "sum_value")
-    )
-
-
 def session_stats(
     events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
 ) -> DataFrame:

@@ -1,334 +1,37 @@
-"""bench.py's artifact/sidecar contract (VERDICT r6 #2/#8), pinned
-without Spark: the stdout line stays under the driver's tail window
-by folding, the sidecar records EVERY entry (fold-immune) with rep
-spreads, and the regression baseline backfills folded entries from
-the committed sidecar so the round-over-round table covers the full
-suite."""
+"""bench.py's artifact and sidecar contract: the stdout line keeps
+exactly the driver's keys and stays under its tail window by folding,
+and the sidecar describes the host window, the live session and each
+entry's work ledger read from Spark's status store."""
 
 from __future__ import annotations
 
 import json
 
 import bench
+from perfbench.spans import SparkStatus
 
 
-def test_encode_line_folds_tail_first_and_counts_noisy():
+def test_encode_line_folds_tail_first():
     timings = {f"q{i:03d}": 0.5 for i in range(200)}
-    line = bench.encode_line(timings, 0.1, n_noisy=3)
+    line, folded = bench.encode_line(timings, 0.1)
     assert len(line) <= bench.LINE_BUDGET
     payload = json.loads(line)
-    assert payload["noisy"] == 3
+    assert set(payload) == {"metric", "value", "unit", "queries", "sf"}
     assert payload["value"] == round(sum(timings.values()), 2)
     # folding sacrifices the LAST-registered names, keeps the head
     assert "q000" in payload["queries"]
     assert bench.FOLD_KEY in payload["queries"]
+    # the folded list names exactly the evicted entries, in registry order
+    assert folded == list(timings)[-len(folded):]
+    assert not set(folded) & set(payload["queries"])
     # the folded bucket carries the evicted entries' total time
     kept = sum(
         v for k, v in payload["queries"].items() if k != bench.FOLD_KEY
     )
     assert abs(kept + payload["queries"][bench.FOLD_KEY] - payload["value"]) < 0.1
-
-
-def test_baseline_backfills_folded_entries_from_sidecar(tmp_path, monkeypatch):
-    monkeypatch.setattr(bench, "_REPO_DIR", str(tmp_path))
-    monkeypatch.setattr(
-        bench, "BASELINE_FILE", str(tmp_path / "bench_baseline.json")
-    )
-    # driver artifact: two visible entries + a fold
-    (tmp_path / "BENCH_r09.json").write_text(json.dumps({
-        "parsed": {
-            "metric": "suite_total_runtime", "value": 10.0, "unit": "sec",
-            "queries": {"a": 1.0, "b": 2.0, bench.FOLD_KEY: 7.0},
-            "sf": 0.1,
-        }
-    }))
-    # sidecar: has the folded entry c (and a stale value for a)
-    (tmp_path / "bench_detail_sf0.1.json").write_text(json.dumps({
-        "sf": 0.1, "total": 10.5,
-        "queries": {
-            "a": {"best": 5.0, "reps": [5.0], "spread": 1.0},
-            "c": {"best": 3.5, "reps": [3.5], "spread": 1.0},
-        },
-    }))
-    base = bench._baseline_queries(0.1)
-    assert base["b"] == 2.0
-    assert base["c"] == 3.5  # folded in the artifact, recovered here
-    assert base["a"] == 1.0  # artifact beats sidecar for visible names
-    assert bench.FOLD_KEY not in base
-
-
-def test_baseline_rejects_cross_sf_artifacts(tmp_path, monkeypatch):
-    monkeypatch.setattr(bench, "_REPO_DIR", str(tmp_path))
-    monkeypatch.setattr(
-        bench, "BASELINE_FILE", str(tmp_path / "bench_baseline.json")
-    )
-    (tmp_path / "BENCH_r02.json").write_text(json.dumps({
-        "parsed": {"queries": {"a": 9.9}, "sf": 0.01}
-    }))
-    assert bench._baseline_queries(0.1) is None
-
-
-def test_spread_metrics_contract():
-    """The adaptive-rep noise metrics (VERDICT r7 #6): warm spread
-    records the full burst and can only grow as reps extend; quiet
-    spread judges the 3 fastest post-warmup reps and CAN drop, which
-    is what makes the extension loop's exit reachable."""
-    # too few post-warmup samples → no metric (never re-flag warmup)
-    assert bench.warm_spread_of([5.0]) is None
-    assert bench.warm_spread_of([5.0, 1.0]) is None
-    assert bench.quiet_spread_of([5.0, 1.0]) is None
-    # the first rep (warmup) is excluded from both metrics
-    assert bench.warm_spread_of([9.0, 1.0, 1.2]) == 1.2
-    assert bench.quiet_spread_of([9.0, 1.0, 1.2]) == 1.2
-    # one burst pins warm_spread forever...
-    bursty = [1.0, 1.0, 4.0, 1.0]
-    assert bench.warm_spread_of(bursty) == 4.0
-    # ...but quiet_spread recovers once 3 quiet reps exist
-    assert bench.quiet_spread_of(bursty + [1.05]) <= bench.NOISY_SPREAD
-    # quiet uses the 3 FASTEST post-warmup reps, not the last 3
-    assert bench.quiet_spread_of([2.0, 1.0, 9.0, 1.1, 1.05]) == 1.1
-
-
-def test_adaptive_extension_loop_recovers_from_burst():
-    """Simulate the main-loop extension policy: a burst in the base
-    reps triggers extra sampling, and with enough quiet reps the
-    noisy flag CLEARS (the review finding: with the all-warm spread
-    this recovery was unreachable — one burst flagged the entry
-    forever). A quiet base triggers no extension at all."""
-
-    def extend(reps, samples):
-        samples = iter(samples)
-        reps = list(reps)
-        while bench.should_extend(reps):
-            reps.append(next(samples))
-        return reps
-
-    # burst in the base window: extends (the 3 quietest still span
-    # the burst at 4 reps) and recovers by MAX_REPS — noisy False
-    reps = extend([1.0, 1.0, 4.0], [1.02, 1.05, 99.0])
-    assert reps == [1.0, 1.0, 4.0, 1.02, 1.05]
-    assert bench.quiet_spread_of(reps) <= bench.NOISY_SPREAD  # recovered
-    assert bench.warm_spread_of(reps) == 4.0  # burst stays recorded
-    # quiet base window: no extra reps spent
-    assert extend([2.0, 1.0, 1.2], [99.0]) == [2.0, 1.0, 1.2]
-
-
-def test_still_warming_detects_unplateaued_tail():
-    """Round-9 JIT-plateau rule: extend while the NEWEST rep is the
-    best so far by >5% (codegen not yet C2-compiled); a flat or
-    noisy tail must NOT extend through this trigger."""
-    # the measured flagship curve: flat at 3.1 after 3 reps (no
-    # signal), cliff at rep 4 → warming until the plateau
-    assert not bench.still_warming_of([11.7, 3.13, 3.11])
-    assert bench.still_warming_of([11.7, 3.13, 3.11, 2.63])
-    assert not bench.still_warming_of([11.7, 3.13, 3.11, 2.63, 2.61])
-    # degenerate cases
-    assert not bench.still_warming_of([5.0])
-    assert not bench.still_warming_of([])
-    assert not bench.still_warming_of([1.0, 0.0])
-    # a burst (newest rep SLOWER) is the noise trigger's business
-    assert not bench.still_warming_of([1.0, 1.0, 4.0])
-
-
-def test_combined_extension_loop_reaches_plateau():
-    """The main-loop condition with both triggers: a warming tail
-    extends to the plateau, then stops; bounded by MAX_REPS."""
-
-    def extend(reps, samples):
-        samples = iter(samples)
-        reps = list(reps)
-        while bench.should_extend(reps):
-            reps.append(next(samples))
-        return reps
-
-    # flagship-shaped: base-4 ends on the cliff → one more rep lands
-    # near the plateau, the next improves <5% → stop at 6 (=MAX_REPS)
-    reps = extend([11.7, 3.13, 3.11, 2.63], [2.43, 2.37, 2.35])
-    assert reps == [11.7, 3.13, 3.11, 2.63, 2.43, 2.37]
-    # flat quiet tail: no extension at all
-    assert extend([9.0, 1.0, 1.02, 1.01], [0.5]) == [9.0, 1.0, 1.02, 1.01]
-
-
-def test_subsecond_entries_draw_deeper_rep_budget():
-    """VERDICT r9 #4: sub-second entries' noise is fixed scheduling
-    jitter, so they may sample up to MAX_REPS_SUBSEC; entries at or
-    above the cutoff keep the standard budget (the budget is a
-    function of the BEST sample, so one fast rep is enough to
-    qualify)."""
-    assert bench.rep_budget_of([0.5, 0.6]) == bench.MAX_REPS_SUBSEC
-    assert bench.rep_budget_of([2.0, 0.9]) == bench.MAX_REPS_SUBSEC
-    assert bench.rep_budget_of([1.0, 1.2]) == bench.MAX_REPS
-    assert bench.rep_budget_of([5.0]) == bench.MAX_REPS
-    # a noisy sub-second entry keeps extending past MAX_REPS...
-    noisy = [0.4, 0.4, 0.9, 0.9, 0.9, 0.9]
-    assert len(noisy) == bench.MAX_REPS and bench.should_extend(noisy)
-    # ...but stops at the deeper budget even if still noisy
-    assert not bench.should_extend(noisy + [0.9] * 4)
-    # a >=1 s entry still stops at MAX_REPS exactly as before
-    assert not bench.should_extend([1.0, 1.0, 4.0, 4.0, 4.0, 4.0])
-
-
-def test_retime_reference_is_min_merge(monkeypatch):
-    """VERDICT r10 #1: the solo-retime trigger compares against the
-    MIN of the historical ratchet, the committed sidecar and the
-    newest driver artifact — a burst-inflated artifact (the r10
-    record) must never become the yardstick that hides the same
-    inflation next round, and a burst-inflated SIDECAR (the r10
-    driver run overwrote the quiet one in the same commit as its
-    artifact) must not either: the ratchet outlives both."""
-    monkeypatch.setattr(
-        bench, "_reference_queries", lambda sf: {"b": 0.9, "d": 0.2}
-    )
-    monkeypatch.setattr(
-        bench, "_sidecar_queries", lambda sf: {"a": 0.35, "b": 2.0}
-    )
-    monkeypatch.setattr(
-        bench,
-        "_baseline_queries",
-        lambda sf: {"a": 1.01, "b": 1.5, "c": 0.7, bench.FOLD_KEY: 9.9},
-    )
-    refs = bench._retime_reference(0.1)
-    assert refs == {"a": 0.35, "b": 0.9, "c": 0.7, "d": 0.2}
-    # all sources missing -> empty reference, retime pass is a no-op
-    monkeypatch.setattr(bench, "_reference_queries", lambda sf: None)
-    monkeypatch.setattr(bench, "_sidecar_queries", lambda sf: None)
-    monkeypatch.setattr(bench, "_baseline_queries", lambda sf: None)
-    assert bench._retime_reference(0.1) == {}
-
-
-def test_retime_reference_respects_justified_cost_changes(monkeypatch):
-    """A RATCHET_RESEEDED entry had its plan DELIBERATELY made more
-    expensive (the r11 witness conversions) and its ratchet reseeded
-    from the new code — the min-merge must NOT resurrect the cheaper
-    old plan's sidecar/artifact timings as the yardstick, or the
-    solo-retime pass burns its budget on that entry every run forever
-    (observed: 3 wasted kmeans_clusters reps per r11 sweep). The
-    reseeded ratchet alone governs those entries. Scope matters: a
-    justified-but-plan-UNCHANGED entry (top_terms_per_source) and an
-    entry missing a ratchet key keep the protective min-merge — their
-    old bests are still reachable by the current code, so dropping
-    the sidecar/artifact legs would let a burst-inflated ratchet
-    hide real inflation."""
-    monkeypatch.setattr(
-        bench, "RATCHET_RESEEDED", {"wit": {0.1: 7.0}, "nofloor": {}}
-    )
-    monkeypatch.setattr(
-        bench, "_reference_queries", lambda sf: {"wit": 6.9, "plain": 1.0}
-    )
-    monkeypatch.setattr(
-        bench,
-        "_sidecar_queries",
-        lambda sf: {"wit": 3.3, "plain": 0.8, "nofloor": 0.5},
-    )
-    monkeypatch.setattr(bench, "_baseline_queries", lambda sf: {"wit": 4.3})
-    refs = bench._retime_reference(0.1)
-    # reseeded + ratcheted: the old-plan 3.3/4.3 records are ignored
-    assert refs["wit"] == 6.9
-    # plan-unchanged entries keep the protective min-merge
-    assert refs["plain"] == 0.8
-    # marked reseeded but no ratchet key and no recorded floor at
-    # this sf: min-merge still applies
-    assert refs["nofloor"] == 0.5
-
-
-def test_retime_reference_recorded_floor_caps_loose_ratchet(monkeypatch):
-    """ADVICE r11 #3: the reseed-time floor is recorded in code, so a
-    ratchet file that lost history (regenerated looser than the
-    reseed commit measured) cannot raise the retime bar above the
-    recorded value — the exact burst-invisibility hazard the
-    min-merge was built against, closed for the reseeded entries
-    too."""
-    monkeypatch.setattr(bench, "RATCHET_RESEEDED", {"wit": {0.1: 5.5}})
-    # live ratchet looser than the recorded reseed floor
-    monkeypatch.setattr(bench, "_reference_queries", lambda sf: {"wit": 8.0})
-    monkeypatch.setattr(bench, "_sidecar_queries", lambda sf: {"wit": 3.0})
-    monkeypatch.setattr(bench, "_baseline_queries", lambda sf: None)
-    assert bench._retime_reference(0.1)["wit"] == 5.5
-    # a ratchet that has tightened BELOW the record governs
-    monkeypatch.setattr(bench, "_reference_queries", lambda sf: {"wit": 5.1})
-    assert bench._retime_reference(0.1)["wit"] == 5.1
-    # ratchet key deleted (fresh reseed): the recorded floor alone
-    # still beats resurrecting the old-plan sidecar best
-    monkeypatch.setattr(bench, "_reference_queries", lambda sf: None)
-    assert bench._retime_reference(0.1)["wit"] == 5.5
-
-
-def test_encode_line_carries_still_inflated_retime_reps():
-    """VERDICT r11 #7: an entry still >RETIME_RATIO over its floor
-    after the solo retime emits its retime rep list + floor in the
-    TAIL artifact (not just the sidecar), so a judge can adjudicate
-    noise from the artifact alone; quiet runs carry no retimes key."""
-    import json
-
-    timings = {f"q{i:03d}": 0.5 for i in range(10)}
-    retimes = {"q003": {"reps": [2.1, 2.0, 2.2], "ref": 0.9}}
-    payload = json.loads(bench.encode_line(timings, 0.1, 1, retimes))
-    assert payload["retimes"] == retimes
-    quiet = json.loads(bench.encode_line(timings, 0.1, 1))
-    assert "retimes" not in quiet
-
-
-def test_ratchet_reseeded_entries_are_justified_and_live():
-    """RATCHET_RESEEDED is a subset of JUSTIFIED_REGRESSIONS (a
-    reseed without a written justification is a silent floor raise)
-    and every member is a live registry entry."""
-    from miba_2023_capstone_rb_nlp_spark.suite import load_suite
-
-    assert set(bench.RATCHET_RESEEDED) <= set(bench.JUSTIFIED_REGRESSIONS)
-    assert set(bench.RATCHET_RESEEDED) <= set(load_suite())
-    # every recorded reseed floor is a positive per-sf seconds value
-    for floors in bench.RATCHET_RESEEDED.values():
-        for sf, v in floors.items():
-            assert isinstance(sf, float) and v > 0
-    # reseed provenance (r13): every reseeded entry records the
-    # commit whose sweep set its floors
-    assert set(bench.RATCHET_RESEED_COMMITS) == set(bench.RATCHET_RESEEDED)
-
-
-def test_reseed_floor_verification_carries_committed_evidence():
-    """A RESEED_FLOOR_VERIFIED entry silences the reseed watch, so
-    the claim must be auditable: the entry must be a reseeded one,
-    and the named evidence file must exist in the repo."""
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for name, by_sf in bench.RESEED_FLOOR_VERIFIED.items():
-        assert name in bench.RATCHET_RESEEDED, name
-        assert by_sf, f"{name}: verified with no sf"
-        for sf, evidence in by_sf.items():
-            # can only verify an sf that actually has a recorded floor
-            assert sf in bench.RATCHET_RESEEDED[name], (name, sf)
-            assert os.path.exists(os.path.join(root, evidence)), (
-                f"{name}@sf{sf}: evidence file {evidence} not committed"
-            )
-
-
-def test_reference_ratchet_min_updates_seeds_and_prunes(
-    tmp_path, monkeypatch
-):
-    """The committed historical-best reference can only tighten: a
-    faster run lowers an entry's floor, a slower run leaves it alone,
-    an unseen entry seeds from its first run, and a key whose entry
-    left the registry is pruned so renamed entries can't pin stale
-    floors forever. The fold bucket never enters the file."""
-    monkeypatch.setattr(bench, "_REPO_DIR", str(tmp_path))
-    (tmp_path / "bench_reference_sf0.1.json").write_text(json.dumps(
-        {"a": 1.0, "b": 0.5, "gone": 9.9}
-    ))
-    written = bench.update_reference(
-        0.1,
-        {"a": 0.8, "b": 0.7, "new": 2.0, bench.FOLD_KEY: 50.0},
-        live_entries={"a", "b", "new"},
-    )
-    assert written == {"a": 0.8, "b": 0.5, "new": 2.0}
-    # the write round-trips through the reader used by the trigger
-    assert bench._reference_queries(0.1) == written
-    # a corrupt file must not kill the reference path
-    (tmp_path / "bench_reference_sf0.1.json").write_text("{not json")
-    assert bench._reference_queries(0.1) is None
-    # ...and update_reference reseeds over it from the run
-    reseeded = bench.update_reference(0.1, {"a": 1.2}, live_entries={"a"})
-    assert reseeded == {"a": 1.2}
+    # a line that fits folds nothing
+    line, folded = bench.encode_line({"a": 1.234, "b": 2.0}, 0.01)
+    assert folded == [] and bench.FOLD_KEY not in json.loads(line)["queries"]
 
 
 def test_host_window_stats_from_proc_stat_deltas():
@@ -355,36 +58,33 @@ def test_host_window_stats_from_proc_stat_deltas():
     ))
 
 
-def test_committed_reference_file_matches_live_registry():
-    """The committed sf0.1 ratchet must track the registry exactly:
-    every key is a live entry (prune happened) and every oracled-or-
-    not suite entry has a floor (seed happened) — a drifted file
-    silently weakens the retime trigger for the missing entries."""
-    from miba_2023_capstone_rb_nlp_spark.suite import load_suite
+def test_host_block_describes_the_live_session(spark):
+    """The parallelism that ran comes from the session, not from
+    ``os.cpu_count()``: the test session is local[4] on any host."""
+    setup = bench.session_setup(spark, ["q198", "q199"])
+    assert setup["master"] == "local[4]"
+    assert setup["default_parallelism"] == 4
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert setup["shuffle_partitions"] == shuffle
+    assert setup["folded"] == ["q198", "q199"]
+    json.dumps(setup)  # the sidecar must serialize it as is
 
-    ref = bench._reference_queries(0.1)
-    assert ref, "bench_reference_sf0.1.json missing or unreadable"
-    live = set(load_suite())
-    assert set(ref) == live
 
+def test_ledger_counts_the_stages_and_shuffle_a_repartition_adds(spark):
+    status = SparkStatus(spark)
+    df = spark.range(200)
 
-def test_encode_line_retimes_survive_folding_budget():
-    """The retimes payload must never push the tail line past the
-    driver's window: with a registry-sized timings dict and a capped
-    retimes dict, the line fits LINE_BUDGET after folding."""
-    import json
+    def plain() -> None:
+        df.write.format("noop").mode("overwrite").save()
 
-    timings = {f"entry_{i:03d}_with_a_long_name": 1.234 for i in range(153)}
-    retimes = {
-        f"entry_{i:03d}_with_a_long_name": {
-            "reps": [9.99, 9.98, 9.97],
-            "ref": 1.23,
-        }
-        for i in range(6)
-    }
-    retimes["_more"] = 19
-    line = bench.encode_line(timings, 0.1, 5, retimes)
-    assert len(line) <= bench.LINE_BUDGET
-    payload = json.loads(line)
-    assert payload["retimes"]["_more"] == 19
-    assert len(payload["retimes"]) == 7
+    def shuffled() -> None:
+        df.repartition(2).write.format("noop").mode("overwrite").save()
+
+    wall, base = bench.timed_rep(status, plain)
+    assert wall > 0
+    assert set(base) == {"jobs", "stages", "cpu_s", "shuffle_mb"}
+    assert base["jobs"] >= 1 and base["stages"] >= 1
+    assert base["shuffle_mb"] == 0.0
+    _, more = bench.timed_rep(status, shuffled)
+    assert more["stages"] > base["stages"]
+    assert more["shuffle_mb"] > 0

@@ -701,3 +701,49 @@ def test_wizard_witnesses_vacuous_on_empty(spark):
         "topics_top5_sorted": 1.0,
         "total_size": 0.0,
     }
+
+
+def _hash_vectors(spark, texts, dim=8):
+    from miba_2023_capstone_rb_nlp_spark.ml.embeddings import hash_embeddings
+
+    df = spark.createDataFrame(list(enumerate(texts)), "id bigint, text string")
+    out = hash_embeddings(df, "text", "id", dim=dim).collect()
+    return {r["id"]: list(r["hash_embedding"]) for r in out}
+
+
+def test_hash_embeddings_packed_kernel_exact_at_its_token_bound(spark):
+    """The packed kernel keeps bucket counts in 8-bit fields of a
+    bigint; bucket 7 sits at bits 56-63, so a positive count of 128
+    there reaches 2^63 and used to raise ARITHMETIC_OVERFLOW under
+    ANSI. ``w10`` is such a token. Rows of up to 127 tokens take the
+    packed path and longer rows the fold, so each row here is
+    compared with its twin of doubled counts, which the fold computes:
+    doubling every count leaves the normalized vector bit-identical."""
+    import hashlib
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    hv = int(hashlib.md5(b"w10").hexdigest()[:15], 16)
+    assert (hv % 8, (hv >> 10) & 1) == (7, 1)
+
+    def text(n_w10, n_a=0, n_b=0):
+        return " ".join(["w10"] * n_w10 + ["alpha"] * n_a + ["beta"] * n_b)
+
+    cases = [(127, 0, 0), (128, 0, 0), (255, 0, 0), (100, 9, 5), (128, 3, 1)]
+    texts = [text(*c) for c in cases] + [
+        text(*(2 * k for k in c)) for c in cases
+    ]
+    vecs = _hash_vectors(spark, texts)
+    for i in range(len(cases)):
+        assert vecs[i] == vecs[i + len(cases)], cases[i]
+    assert vecs[1] == [0.0] * 7 + [1.0]
+
+
+def test_hash_embeddings_above_8_dims_take_the_fold(spark):
+    """dim > 8 no longer fits one bigint of 8-bit fields; it takes
+    the general fold instead of raising."""
+    texts = ["spark news stream spark", " ".join(f"w{i}" for i in range(300))]
+    vecs = _hash_vectors(spark, texts, dim=16)
+    assert len(vecs) == 2
+    for v in vecs.values():
+        assert len(v) == 16
+        assert abs(sum(x * x for x in v) - 1.0) < 1e-4
