@@ -3,8 +3,11 @@ API-parity with the reference's ``pipeline_executor.py`` but every
 post-acquisition step is one lazy DataFrame DAG.
 
 Lifecycle: cache probe (S1) → link acquisition (S4-S7) → distributed
-content fetch (S8/S9) → join+explode+row-id (J1/L4/P8) → cleaning
-chain (F1-F7) → parquet writes (S2/S3).
+content fetch (S8/S9) → join+explode+row-id (J1/L4/P8) → raw parquet
+write (S2) → cleaning chain (F1-F7) over the written raw parquet →
+clean parquet write (S3). Cleaning reads the raw file back instead of
+re-running the raw plan, so each URL is fetched once and the raw and
+clean tables describe the same fetch.
 """
 
 from __future__ import annotations
@@ -74,6 +77,7 @@ class PipelineExecutor:
 
         raw = raw.withColumn("article_index", md5_long(F.col("se_link")))
         raw.write.mode("overwrite").parquet(raw_path)  # S2
+        raw = self.spark.read.parquet(raw_path)
         clean = clean_articles(raw.drop("pos", "bs_link", "n3k_link"))
         clean.write.mode("overwrite").parquet(clean_path)  # S3
         return self.spark.read.parquet(clean_path)

@@ -52,25 +52,3 @@ def euclidean(a: Column, b: Column) -> Column:
 
 def scale(vec: Column, factor: Column) -> Column:
     return F.transform(as_double(vec), lambda x: x * factor)
-
-
-# --- expanded (known-dim) variants ---------------------------------
-# Higher-order array functions (zip_with/aggregate) cost a lambda call
-# per element per row; when the dimension is known at plan time, a
-# literal chain of products compiles to straight-line whole-stage
-# codegen arithmetic (~10× faster in the pair-join hot path) and is
-# bit-identical: aggregate folds ((0+p0)+p1)+… and the literal chain
-# evaluates (p0+p1)+p2… with 0.0+p0 ≡ p0.
-
-
-def dot_expanded(a: Column, b: Column, dim: int) -> Column:
-    # per-ELEMENT double casts: getItem on a cast(array<double>) column
-    # re-casts the whole array per access (O(dim²) per row); indexing
-    # the raw array and widening the scalar is bit-identical and O(dim)
-    def at(v: Column, i: int) -> Column:
-        return v.getItem(i).cast("double")
-
-    out = at(a, 0) * at(b, 0)
-    for i in range(1, dim):
-        out = out + at(a, i) * at(b, i)
-    return out

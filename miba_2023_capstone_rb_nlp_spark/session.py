@@ -10,10 +10,16 @@ are engine-independent, and explicit shuffle-partition sizing.
 from __future__ import annotations
 
 import os
+import re
+import sys
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# Absolute ceiling on a FORCED broadcast's build rows, whatever the
+# session's byte budget: ~160 MB of 16 B rows, inside executor/driver
+# budgets on any real cluster (see broadcast_limit_rows).
+BROADCAST_MAX_ROWS = 10_000_000
 
 
 def get_spark(
@@ -93,3 +99,61 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _parse_conf_bytes(raw: str) -> int:
+    """Spark size-conf string → bytes ("10485760", "10MB", "1g",
+    "-1"), matching JavaUtils.byteStringAs: an INTEGER count plus an
+    optional unit suffix. Fractional sizes ("1.5m") are rejected
+    exactly as the session itself would refuse them — accepting a
+    value the session would error on would gate the broadcast off a
+    conf that cannot exist (ADVICE r12). Unparseable values fall back
+    to the 10 MB built-in default rather than raising — a mis-set
+    conf shouldn't kill the query, only the gate's precision — and
+    the fallback is announced on stderr (ADVICE r12): a silently
+    defaulted budget would force broadcasts sized to a threshold the
+    operator never set."""
+    s = raw.strip().lower().removesuffix("b")
+    mult = 1
+    for suffix, m in (
+        ("k", 1 << 10),
+        ("m", 1 << 20),
+        ("g", 1 << 30),
+        ("t", 1 << 40),
+        ("p", 1 << 50),
+    ):
+        if s.endswith(suffix):
+            s, mult = s[: -len(suffix)], m
+            break
+    # digits-only like JavaUtils' ([0-9]+)([a-z]+)? — a bare int()
+    # would also admit '+10m', '1_0m' and inner whitespace, all of
+    # which the session itself rejects. Leading '-' is allowed only
+    # because Spark special-cases a negative threshold as "disabled".
+    if re.fullmatch(r"-?[0-9]+", s):
+        return int(s, 10) * mult
+    print(
+        "broadcast gate: unparseable "
+        f"spark.sql.autoBroadcastJoinThreshold {raw!r}; falling "
+        "back to the 10 MB built-in default",
+        file=sys.stderr,
+    )
+    return 10 << 20
+
+
+def broadcast_limit_rows(spark: SparkSession, row_bytes: int) -> int:
+    """Rows under which a build side of ``row_bytes``-wide rows may be
+    FORCE-broadcast.
+
+    A forced broadcast is for build sides whose TRUE size Spark
+    misjudges (a narrow projection of a wide file, a pruned dim), so
+    the faithful gate is: would rows × row_bytes pass the session's
+    own ``spark.sql.autoBroadcastJoinThreshold``? Driving the gate off
+    that conf means cluster operators tune ONE broadcast knob;
+    BROADCAST_MAX_ROWS stays as an absolute ceiling (and as the test
+    seam). A threshold of -1 (auto-broadcast disabled) disables the
+    forced broadcast too — the operator asked for no broadcasts."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    threshold = _parse_conf_bytes(raw)
+    if threshold <= 0:
+        return 0
+    return min(BROADCAST_MAX_ROWS, threshold // row_bytes)

@@ -2,7 +2,8 @@
 
 The reference fetches each URL twice (newspaper3k + BeautifulSoup)
 on driver threads; here the URL table stays a DataFrame and the fetch
-+ parse runs as an Arrow-batched ``mapInPandas`` over partitions —
+(``links.default_fetcher``, the link sources' HTTP client) + parse
+runs once per URL as an Arrow-batched ``mapInPandas`` over partitions —
 Spark's task scheduler is the thread pool, retries/timeouts are task-
 level, and the URL list never collects to the driver.
 
@@ -19,7 +20,6 @@ failures at the thread barrier, content_extractor.py:196-199).
 
 from __future__ import annotations
 
-import urllib.request
 from collections.abc import Iterator
 from html.parser import HTMLParser
 from typing import TYPE_CHECKING
@@ -27,12 +27,11 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from miba_2023_capstone_rb_nlp_spark.sources.links import default_fetcher
 from miba_2023_capstone_rb_nlp_spark.sources.schemas import RAW_CONTENT_SCHEMA
 
 if TYPE_CHECKING:
     import pandas as pd
-
-HTTP_TIMEOUT = 10.0  # content_extractor.py:29
 
 
 class _PageParser(HTMLParser):
@@ -113,27 +112,16 @@ def extract_page(url: str, html: str) -> dict:
     }
 
 
-def fetch_url(url: str, timeout: float = HTTP_TIMEOUT) -> str:
-    req = urllib.request.Request(
-        url, headers={"User-Agent": "Mozilla/5.0 (X11; Linux x86_64)"}
-    )
-    with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
-        return resp.read().decode("utf-8", errors="replace")
-
-
-def fetch_content(links: DataFrame, url_col: str = "se_link",
-                  partitions: int | None = None) -> DataFrame:
+def fetch_content(links: DataFrame, url_col: str = "se_link") -> DataFrame:
     """URL DataFrame → RAW_CONTENT_SCHEMA DataFrame, distributed.
 
-    ``repartition`` first so fetch parallelism = partition count
-    (the knob replacing the reference's thread-pool sizing,
-    content_extractor.py:182-186).
+    Fetch parallelism = the input's partition count (the knob
+    replacing the reference's thread-pool sizing,
+    content_extractor.py:182-186); repartition the links to change it.
     """
     urls = links.select(F.col(url_col).alias("url")).filter(
         F.col("url").isNotNull()
     )
-    if partitions:
-        urls = urls.repartition(partitions)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
@@ -142,7 +130,7 @@ def fetch_content(links: DataFrame, url_col: str = "se_link",
             rows = []
             for url in pdf["url"]:
                 try:
-                    rows.append(extract_page(url, fetch_url(url)))
+                    rows.append(extract_page(url, default_fetcher(url)))
                 except Exception:  # noqa: BLE001 — failures dropped (S8)
                     continue
             yield pd.DataFrame(

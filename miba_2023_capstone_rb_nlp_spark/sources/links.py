@@ -9,13 +9,17 @@ encoded into the request URL (the only pushdown a search engine
 offers).
 
 The HTTP layer is injected (``fetcher(url) -> html``): production
-uses stdlib urllib with a politeness delay; tests inject canned HTML.
-Reference behaviors kept: Google ``tbs=cdr`` date-range params and
-pnnext pagination (link_extractor.py:145-155,214-220), Bing's
-page-hash stall detection + offset hard cap (:299,:317-324), Yahoo's
-``RU=(.+)/RK`` link de-obfuscation (:450), per-engine max_articles
-truncation (L1), last-wins dedup by se_link (S7, :558 — we keep
-dropDuplicates' arbitrary-row semantics, documented deviation).
+uses ``default_fetcher`` (stdlib urllib, the same client the content
+fetch uses) with a politeness delay; tests inject canned HTML.
+``LinkSource.get_links`` is the one paging loop; an engine supplies
+its first and next page URL. Reference behaviors kept: Google
+``tbs=cdr`` date-range params and pnnext pagination
+(link_extractor.py:145-155,214-220), Bing's offset hard cap (:299),
+Yahoo's ``RU=(.+)/RK`` link de-obfuscation (:450), per-engine
+max_articles truncation (L1), last-wins dedup by se_link (S7, :558 —
+we keep dropDuplicates' arbitrary-row semantics, documented
+deviation). Bing's page-hash stall stop (:317-324) ends every
+engine's paging, so a self-linking page cannot loop.
 """
 
 from __future__ import annotations
@@ -40,7 +44,7 @@ POLITE_DELAY_RANGE = (1.0, 2.5)  # link_extractor.py:22
 USER_AGENT = "Mozilla/5.0 (X11; Linux x86_64)"
 
 
-def default_fetcher(url: str, timeout: float = 10.0) -> str:
+def default_fetcher(url: str, timeout: float = 10.0) -> str:  # content_extractor.py:29
     req = urllib.request.Request(url, headers={"User-Agent": USER_AGENT})
     with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
         return resp.read().decode("utf-8", errors="replace")
@@ -71,16 +75,50 @@ def _date_params(
 
 
 class LinkSource:
-    """Base: subclasses implement page_url/parse_page/next_page."""
+    """One paging loop shared by every engine. Subclasses supply
+    ``_RESULT_RE`` (groups link/title/desc/source), ``first_url`` and,
+    unless the page carries a ``_NEXT_RE`` link, ``next_url``."""
 
     engine = "base"
+    _NEXT_RE: re.Pattern | None = None
 
     def __init__(self, fetcher: Fetcher | None = None, polite: bool = True):
         self.fetcher = fetcher or default_fetcher
         self.polite = polite
 
+    def next_url(self, url: str, html: str) -> str | None:
+        nxt = self._NEXT_RE.search(html) if self._NEXT_RE else None
+        return urllib.parse.urljoin(url, nxt.group(1)) if nxt else None
+
+    def clean_link(self, link: str) -> str:
+        return link
+
     def get_links(self, query: str, max_articles: int = 100, **kw) -> list[dict]:
-        raise NotImplementedError
+        url = self.first_url(query, **kw)
+        out: list[dict] = []
+        seen: set[str] = set()
+        while url and len(out) < max_articles:
+            html = self.fetcher(url)
+            # stall stop: a page already seen in this call ends paging
+            # (link_extractor.py:317-324), whatever its next link says
+            h = hashlib.md5(html.encode()).hexdigest()
+            if h in seen:
+                break
+            seen.add(h)
+            for m in self._RESULT_RE.finditer(html):
+                out.append(
+                    {
+                        "engine": self.engine,
+                        "se_link": self.clean_link(m["link"]),
+                        "se_title": _strip_tags(m["title"]),
+                        "se_description": _strip_tags(m["desc"]) if m["desc"] else None,
+                        "se_source": _strip_tags(m["source"]) if m["source"] else None,
+                    }
+                )
+            url = self.next_url(url, html)
+            if self.polite:
+                _polite_sleep()
+        return out[:max_articles]  # L1 per-engine truncation
 
 
 class GoogleNewsSource(LinkSource):
@@ -94,40 +132,19 @@ class GoogleNewsSource(LinkSource):
     )
     _NEXT_RE = re.compile(r'id="pnnext"\s+href="([^"]+)"')
 
-    def get_links(
+    def first_url(
         self,
         query: str,
-        max_articles: int = 100,
         start_date: str | None = None,
         end_date: str | None = None,
         duration_months: int | None = None,
-    ) -> list[dict]:
-        url = (
+    ) -> str:
+        return (
             "https://www.google.com/search?q="
             + urllib.parse.quote_plus(query)
             + "&tbm=nws"
             + _date_params(start_date, end_date, duration_months)
         )
-        out: list[dict] = []
-        while url and len(out) < max_articles:
-            html = self.fetcher(url)
-            for m in self._RESULT_RE.finditer(html):
-                out.append(
-                    {
-                        "engine": self.engine,
-                        "se_link": m["link"],
-                        "se_title": _strip_tags(m["title"]),
-                        "se_description": _strip_tags(m["desc"]) if m["desc"] else None,
-                        "se_source": _strip_tags(m["source"]),
-                    }
-                )
-                if len(out) >= max_articles:  # L1 per-engine truncation
-                    break
-            nxt = self._NEXT_RE.search(html)
-            url = urllib.parse.urljoin(url, nxt.group(1)) if nxt else None
-            if self.polite:
-                _polite_sleep()
-        return out[:max_articles]
 
 
 class BingNewsSource(LinkSource):
@@ -140,36 +157,17 @@ class BingNewsSource(LinkSource):
         r'(?:.*?<div class="source">(?P<source>.*?)</div>)?',
         re.S,
     )
+    def first_url(self, query: str, **kw) -> str:
+        return (
+            "https://www.bing.com/news/infinitescrollajax?q="
+            + urllib.parse.quote_plus(query)
+            + "&first=1"
+        )
 
-    def get_links(self, query: str, max_articles: int = 100, **kw) -> list[dict]:
-        out: list[dict] = []
-        first, last_hash = 1, None
-        while len(out) < max_articles and first < self.OFFSET_HARD_CAP:
-            url = (
-                "https://www.bing.com/news/infinitescrollajax?q="
-                + urllib.parse.quote_plus(query)
-                + f"&first={first}"
-            )
-            html = self.fetcher(url)
-            # stall detection by page hash (link_extractor.py:317-324)
-            h = hashlib.md5(html.encode()).hexdigest()
-            if h == last_hash:
-                break
-            last_hash = h
-            for m in self._RESULT_RE.finditer(html):
-                out.append(
-                    {
-                        "engine": self.engine,
-                        "se_link": m["link"],
-                        "se_title": _strip_tags(m["title"]),
-                        "se_description": _strip_tags(m["desc"]) if m["desc"] else None,
-                        "se_source": _strip_tags(m["source"]) if m["source"] else None,
-                    }
-                )
-            first += self.PAGE_SIZE
-            if self.polite:
-                _polite_sleep()
-        return out[:max_articles]
+    def next_url(self, url: str, html: str) -> str | None:
+        base, first = url.rsplit("=", 1)  # first= is the last param
+        first = int(first) + self.PAGE_SIZE
+        return f"{base}={first}" if first < self.OFFSET_HARD_CAP else None
 
 
 class YahooNewsSource(LinkSource):
@@ -184,32 +182,12 @@ class YahooNewsSource(LinkSource):
     _NEXT_RE = re.compile(r'<a class="next" href="([^"]+)"')
     _RU_RE = re.compile(r"RU=(.+?)/RK")  # link de-obfuscation, :450
 
-    def _clean_link(self, link: str) -> str | None:
+    def first_url(self, query: str, **kw) -> str:
+        return "https://news.search.yahoo.com/search?p=" + urllib.parse.quote_plus(query)
+
+    def clean_link(self, link: str) -> str:
         m = self._RU_RE.search(link)
         return urllib.parse.unquote(m.group(1)) if m else link
-
-    def get_links(self, query: str, max_articles: int = 100, **kw) -> list[dict]:
-        url = "https://news.search.yahoo.com/search?p=" + urllib.parse.quote_plus(query)
-        out: list[dict] = []
-        while url and len(out) < max_articles:
-            html = self.fetcher(url)
-            for m in self._RESULT_RE.finditer(html):
-                out.append(
-                    {
-                        "engine": self.engine,
-                        "se_link": self._clean_link(m["link"]),
-                        "se_title": _strip_tags(m["title"]),
-                        "se_description": _strip_tags(m["desc"]) if m["desc"] else None,
-                        "se_source": _strip_tags(m["source"]) if m["source"] else None,
-                    }
-                )
-                if len(out) >= max_articles:
-                    break
-            nxt = self._NEXT_RE.search(html)
-            url = urllib.parse.urljoin(url, nxt.group(1)) if nxt else None
-            if self.polite:
-                _polite_sleep()
-        return out[:max_articles]
 
 
 _TAG_RE = re.compile(r"<[^>]+>")

@@ -49,8 +49,6 @@ REGISTRY: dict[str, Query] = {}
 # clearCache()es between entries.
 _LIVE_PERSISTS: list[DataFrame] = []
 _CURRENT_ENTRY: list[str] = []  # 1-element mutable cell
-# (spark, key, prior value or None) saved by set_conf_tracked
-_LIVE_CONF_RESTORES: list[tuple[SparkSession, str, str | None]] = []
 
 
 def persist_tracked(df: DataFrame, level=None) -> DataFrame:
@@ -61,91 +59,15 @@ def persist_tracked(df: DataFrame, level=None) -> DataFrame:
     return out
 
 
-def _conf_explicitly_set(spark: SparkSession, key: str) -> bool | None:
-    """True/False iff the key is/isn't EXPLICITLY set on this session
-    (as opposed to merely resolving to its built-in default) — the
-    set-vs-default probe RuntimeConfig doesn't expose.
-
-    ``spark.conf.get(key, sentinel)`` cannot serve here: the default
-    argument is VALIDATED against the conf entry's type (a string
-    sentinel throws INVALID_CONF_VALUE on typed confs), so the probe
-    goes through the JVM ``SQLConf.contains`` bridge instead — a
-    private API, absent under Spark Connect, hence the ``None``
-    (unknown) return for the caller to fall back on."""
-    try:
-        return bool(spark._jsparkSession.sessionState().conf().contains(key))
-    except Exception:
-        return None
-
-
-def set_conf_tracked(spark: SparkSession, key: str, value: str) -> None:
-    """Set a session conf an entry's LAZY plan needs at execution
-    time, restoring the prior value on the same lifecycle as
-    persist_tracked (ADVICE r8 #1): a plain try/finally would restore
-    before the caller materializes the returned DataFrame, so the
-    restore instead fires when a DIFFERENT entry is next invoked — by
-    which point the sweep has collected this entry's result.
-
-    Caveat (review r9 finding #1): unlike an unpersisted cache — which
-    merely recomputes — a plan whose EXECUTION depends on a tracked
-    conf errors if materialized after the restore, so entries must not
-    make execution depend on one (the connector entry reads through a
-    conf-free reader for exactly this reason). Use this only for confs
-    that tune execution, never ones that gate it.
-
-    Unset-capture (VERDICT r10 #6, closing ADVICE r9 #2 properly): a
-    default-valued key that was never explicitly set is restored to
-    TRULY-UNSET, not re-set to its default string — a later consumer
-    distinguishing set-vs-default sees unchanged state. The probe is
-    ``_conf_explicitly_set``; where that bridge is unavailable
-    (Connect), restore degrades to by-value — same effective value,
-    the documented pre-r11 behavior."""
-    try:
-        prior: str | None = spark.conf.get(key)
-    except Exception:  # unset key without a default: Spark raises
-        prior = None
-    if prior is not None and _conf_explicitly_set(spark, key) is False:
-        # the value came from the built-in default, not a set()
-        prior = None
-    _LIVE_CONF_RESTORES.append((spark, key, prior))
-    spark.conf.set(key, value)
-
-
 def release_persisted() -> None:
     while _LIVE_PERSISTS:
         df = _LIVE_PERSISTS.pop()
         try:
             df.unpersist(blocking=False)
         except Exception:
-            # a stopped session has nothing to unpersist (ADVICE r9
-            # #1: an unguarded raise here would skip the conf-restore
-            # loop below, leaking tracked confs into the next entry);
-            # the cache dies with the session either way
+            # a stopped session has nothing to unpersist; the cache
+            # dies with the session either way
             pass
-    while _LIVE_CONF_RESTORES:
-        spark, key, prior = _LIVE_CONF_RESTORES.pop()
-        try:
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
-        except Exception as e:
-            # a stopped session has nothing to restore onto; any
-            # OTHER failure means the conf is leaking into subsequent
-            # entries — surface it instead of swallowing silently
-            # (review r9 finding #2)
-            try:
-                stopped = spark.sparkContext._jsc is None
-            except Exception:
-                stopped = True
-            if not stopped:
-                import warnings
-
-                warnings.warn(
-                    f"tracked conf restore failed for {key!r}: {e!r} — "
-                    "the session keeps the entry-scoped value",
-                    stacklevel=2,
-                )
 
 
 def register(name: str, oracle: str | None = None):
@@ -289,7 +211,7 @@ _DEPRIORITIZED = (
     "price_quantiles",  # mergeable-sketch agg ⊂ approx_distinct_parts (in-window)
     "etl_clean_articles",  # cleaning chain pinned by tests/test_plans.py + tests/test_wizard.py
     "explode_paragraphs",  # posexplode spans ⊂ doc_chunks_udtf UDTF spans (in-window)
-    "ner_top_orgs",  # weighted top-n per group ⊂ weighted_sample_docs weighted heap top-k (in-window) + tests/test_guards_r12.py
+    "ner_top_orgs",  # weighted top-n per group ⊂ weighted_sample_docs weighted heap top-k (in-window) + tests/test_broadcast_gate.py
     "media_features",  # Arrow binary crossing ⊂ doc_bytes_arrow (in-window) + tests/test_multimodal.py
     "events_session_windows",  # per-user session seqs ⊂ retention_cohorts (in-window)
     "events_tumbling_streaming",  # micro-batch tumbling ⊂ events_stream_static_join (in-window) + tests/test_streaming.py

@@ -23,6 +23,7 @@ from miba_2023_capstone_rb_nlp_spark.functions.numeric import (
     sql_dsum,
     sql_fixed,
 )
+from miba_2023_capstone_rb_nlp_spark.session import broadcast_limit_rows
 from miba_2023_capstone_rb_nlp_spark.suite import register
 
 
@@ -2162,7 +2163,8 @@ def q_excess_shipment_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t(spark, sf_dir, "nation").filter(
         F.col("n_name").isin(*_Q20_NATIONS)
     )
-    s = _t(spark, sf_dir, "supplier").join(
+    supplier = _t(spark, sf_dir, "supplier")
+    s = supplier.join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
     # r16 (guide §3.2): semi-filter the FACT side with the bounded
@@ -2170,19 +2172,21 @@ def q_excess_shipment_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate — the nation predicate is on the aggregate KEY, so it
     # commutes exactly with the grouping, and the first (and only
     # corpus-sized) exchange now carries ~8% of the rows. The build
-    # side is the nation-pruned supplier dim (≈8% of suppliers);
-    # broadcast cost grows with SF but stays ~12× smaller than the
-    # shuffle bytes it removes — at extreme SFs gate on size and let
-    # the pushdown lapse rather than shuffle lineitem for the semi.
-    li_elig = li.join(
-        F.broadcast(s.select("s_suppkey")),
-        li["l_suppkey"] == F.col("s_suppkey"),
-        "left_semi",
-    )
+    # side is the nation-pruned supplier dim (≈8% of suppliers),
+    # forced to broadcast only while the whole supplier table's 8 B
+    # s_suppkey rows fit the session's broadcast budget; past it the
+    # pushdown lapses and the final semi-join alone filters. The
+    # count is a parquet metadata read (no data scan).
+    if supplier.count() <= broadcast_limit_rows(spark, 8):
+        li = li.join(
+            F.broadcast(s.select("s_suppkey")),
+            li["l_suppkey"] == F.col("s_suppkey"),
+            "left_semi",
+        )
     in96 = (
         F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp")
     ) & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-    sp = li_elig.groupBy("l_suppkey", "l_partkey").agg(
+    sp = li.groupBy("l_suppkey", "l_partkey").agg(
         F.sum(F.when(in96, dec("l_quantity", 2, 18))).alias("y96"),
         F.sum(dec("l_quantity", 2, 18)).alias("tot"),
     )

@@ -74,11 +74,6 @@ def q_doc_stats_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- language identification ---------------------------------------
-def _sql_score(markers):
-    inlist = ",".join(f"''{m}''" for m in markers).replace("''", "'")
-    return f"len(list_filter(p, t -> t IN ({inlist})))"
-
-
 _LANG_ORACLE = """
 WITH s AS (
   SELECT doc_id, lang AS true_lang,

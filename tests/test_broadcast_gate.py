@@ -1,19 +1,23 @@
-"""Round-12 guard lanes: the conf-byte parser behind the ner
-broadcast gate (VERDICT r11 what's-wrong #4) must read every size
-form Spark emits for ``spark.sql.autoBroadcastJoinThreshold`` —
-a mis-parse either disables the forced broadcast (harmless) or
-forces one past the operator's budget (not harmless), so the parser
-is pinned spark-free here."""
+"""The forced-broadcast gate (``session.broadcast_limit_rows``): the
+conf-byte parser must read every size form Spark emits for
+``spark.sql.autoBroadcastJoinThreshold`` — a mis-parse either
+disables a forced broadcast (harmless) or forces one past the
+operator's budget (not harmless), so the parser is pinned spark-free
+here — and Q20 drops its broadcast pre-filter when the budget is
+disabled, with its result unchanged."""
 
 from __future__ import annotations
 
 import pytest
 
-from miba_2023_capstone_rb_nlp_spark.suite.ner import (
-    BROADCAST_MAX_LABEL_ROWS,
-    LABEL_ROW_BYTES,
+from miba_2023_capstone_rb_nlp_spark.session import (
+    BROADCAST_MAX_ROWS,
     _parse_conf_bytes,
 )
+from miba_2023_capstone_rb_nlp_spark.suite import load_suite
+from miba_2023_capstone_rb_nlp_spark.suite.ner import LABEL_ROW_BYTES
+from tests.conftest import SF_TEST_DIR
+from tests.parity import compare, duckdb_conn
 
 
 @pytest.mark.parametrize(
@@ -69,4 +73,25 @@ def test_parse_conf_bytes_valid_forms_stay_silent(capsys):
 def test_gate_constants_sane():
     # the absolute ceiling must stay a meaningful cap above the
     # default-threshold row bound (10 MB / 16 B = 655,360 rows)
-    assert (10 << 20) // LABEL_ROW_BYTES < BROADCAST_MAX_LABEL_ROWS
+    assert (10 << 20) // LABEL_ROW_BYTES < BROADCAST_MAX_ROWS
+
+
+def test_q20_without_broadcast_budget_skips_prefilter(spark):
+    """Auto-broadcast disabled (-1) admits no forced broadcast of the
+    supplier keys: Q20 keeps only its final semi-join, and its result
+    still matches the oracle."""
+    q = load_suite()["excess_shipment_q20"]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        df = q.fn(spark, SF_TEST_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("LeftSemi") == 1
+        con = duckdb_conn(SF_TEST_DIR)
+        try:
+            compare(df, con.execute(q.oracle).df(), "excess_shipment_q20")
+        finally:
+            con.close()
+    finally:
+        spark.conf.set(key, prior)

@@ -1435,9 +1435,9 @@ def test_ner_label_broadcast_gate_falls_back_to_shuffle_hash(
     limit) the join must become the documented shuffle_hash fallback,
     never an unbounded forced broadcast. Pinned by shrinking the cap
     to 0 and asserting the fallback plan shape."""
-    from miba_2023_capstone_rb_nlp_spark.suite import ner as ner_mod
+    from miba_2023_capstone_rb_nlp_spark import session as session_mod
 
-    monkeypatch.setattr(ner_mod, "BROADCAST_MAX_LABEL_ROWS", 0)
+    monkeypatch.setattr(session_mod, "BROADCAST_MAX_ROWS", 0)
     df = SUITE["ner_top_orgs"].fn(spark, SF_TEST_DIR)
     final = _final_plan(df)
     assert "ShuffledHashJoin" in final
@@ -1456,27 +1456,28 @@ def test_ner_label_broadcast_gate_honors_session_threshold(spark):
     not a bare row count — an operator who disables auto-broadcast
     (-1) must get the shuffle_hash fallback, not a forced broadcast
     that ignores their budget."""
+    from miba_2023_capstone_rb_nlp_spark import session as session_mod
     from miba_2023_capstone_rb_nlp_spark.suite import ner as ner_mod
+
+    def limit_rows(spark):
+        return session_mod.broadcast_limit_rows(spark, ner_mod.LABEL_ROW_BYTES)
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     prior = spark.conf.get(key)
     try:
         spark.conf.set(key, "-1")
-        assert ner_mod._label_broadcast_limit_rows(spark) == 0
+        assert limit_rows(spark) == 0
         df = SUITE["ner_top_orgs"].fn(spark, SF_TEST_DIR)
         final = _final_plan(df)
         assert "ShuffledHashJoin" in final
         assert "BroadcastHashJoin" not in final
         # a 1 KB budget admits 64 build rows, not the 500-row fixture
         spark.conf.set(key, "1k")
-        assert ner_mod._label_broadcast_limit_rows(spark) == 64
+        assert limit_rows(spark) == 64
     finally:
         spark.conf.set(key, prior)
     # the absolute ceiling still caps a huge session budget
-    assert (
-        ner_mod._label_broadcast_limit_rows(spark)
-        <= ner_mod.BROADCAST_MAX_LABEL_ROWS
-    )
+    assert limit_rows(spark) <= session_mod.BROADCAST_MAX_ROWS
 
 
 # --- r10 promoted-cohort pins: the plan shapes the rotation relies on

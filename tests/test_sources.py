@@ -113,6 +113,35 @@ def test_yahoo_link_deobfuscation():
     assert links[0]["se_link"] == "https://ex.com/y1"
 
 
+@pytest.mark.parametrize(
+    "cls,page",
+    [
+        (
+            GoogleNewsSource,
+            '<a id="pnnext" href="https://www.google.com/search?q=q&tbm=nws">Next</a>',
+        ),
+        (
+            YahooNewsSource,
+            '<a class="next" href="https://news.search.yahoo.com/search?p=q">Next</a>',
+        ),
+    ],
+    ids=["Google", "Yahoo"],
+)
+def test_self_linking_empty_page_stops_paging(cls, page):
+    """An empty results page whose next link leads back to itself ends
+    paging on the repeated page instead of fetching it forever."""
+    calls = []
+
+    def fetcher(url):
+        calls.append(url)
+        if len(calls) > 10:
+            raise RuntimeError("paging did not stop")
+        return f"<html><body>{page}</body></html>"
+
+    assert cls(fetcher=fetcher, polite=False).get_links("q", max_articles=10) == []
+    assert len(calls) == 2
+
+
 def test_date_param_conflict_raises():
     src = GoogleNewsSource(fetcher=lambda url: GOOGLE_PAGE, polite=False)
     with pytest.raises(ValueError, match="duration"):
@@ -180,7 +209,7 @@ def article_files(tmp_path: pathlib.Path):
 def test_fetch_content_distributed(spark, article_files):
     src = FileSource(article_files)
     links = get_all_links(spark, [src], "q", max_articles=10)
-    content = fetch_content(links, url_col="se_link", partitions=2)
+    content = fetch_content(links.repartition(2), url_col="se_link")
     rows = content.collect()
     assert len(rows) == 4
     assert all(len(r["bs_paragraph"]) == 3 for r in rows)
@@ -207,6 +236,32 @@ def test_pipeline_executor_end_to_end(spark, article_files, tmp_path):
     # cache probe short-circuits (S1): second call reads parquet
     again = ex.execute("integration test", max_articles=10)
     assert again.count() == len(rows)
+
+
+def test_pipeline_executor_cleans_the_written_raw_file(
+    spark, article_files, tmp_path, monkeypatch
+):
+    """The clean table is built from the raw parquet just written, not
+    from the raw plan's lineage: the content fetch runs once per URL."""
+    from miba_2023_capstone_rb_nlp_spark import executor as executor_mod
+
+    seen, clean_articles = [], executor_mod.clean_articles
+
+    def spy(df):
+        seen.append(df)
+        return clean_articles(df)
+
+    monkeypatch.setattr(executor_mod, "clean_articles", spy)
+    ex = PipelineExecutor(
+        spark, data_dir=str(tmp_path / "data"), sources=[FileSource(article_files)]
+    )
+    assert ex.execute("raw reuse", max_articles=10).count() > 0
+    (cleaned_input,) = seen
+    raw_path = pathlib.Path(ex._paths("raw reuse", 10)[0]).resolve()
+    plan = cleaned_input._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" not in plan
+    files = cleaned_input.inputFiles()
+    assert files and all(raw_path.as_uri() in f for f in files)
 
 
 def test_sanitize_query():
@@ -310,33 +365,6 @@ class TestPythonDataSource:
 
         with _conf(spark, "spark.sql.python.filterPushdown.enabled", "true"):
             assert rows("true") == rows("false") and rows("true")
-
-
-def test_tracked_conf_restored_on_next_entry(spark):
-    """set_conf_tracked lifecycle (ADVICE r8 #1): a conf tracked
-    during one entry's build stays set until a DIFFERENT registry
-    entry is invoked — the same release point as tracked persists —
-    then restores to its prior value."""
-    from tests.conftest import SF_TEST_DIR
-
-    from miba_2023_capstone_rb_nlp_spark.suite import (
-        load_suite,
-        set_conf_tracked,
-    )
-
-    suite = load_suite()
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prior = spark.conf.get(key)
-    assert prior != "1234"
-    # simulate an entry builder tracking a conf mid-build: enter the
-    # entry's lifecycle scope first (the wrapped fn sets the current-
-    # entry cell), then track
-    df = suite["custom_pysource_links"].fn(spark, SF_TEST_DIR)
-    set_conf_tracked(spark, key, "1234")
-    assert spark.conf.get(key) == "1234"  # held for the lazy plan
-    assert df.count() > 0  # materializes while the conf is held
-    suite["exact_dedup"].fn(spark, SF_TEST_DIR)
-    assert spark.conf.get(key) == prior  # released with the entry
 
 
 def test_pysource_entry_plan_survives_deferred_execution(spark):
