@@ -3,38 +3,25 @@ dedup output (exact / Jaccard / MinHash / SimHash candidates) into
 duplicate GROUPS — the form a training-data pipeline actually
 consumes (keep one canonical doc per component).
 
-Two interchangeable algorithms, same contract:
-
-1. ``connected_components`` — iterative min-label propagation on the
-   symmetrized edge list. Each round is one equi-join (labels onto
-   edge sources) + one min-aggregate (per destination) + one label
-   update — two shuffles, all spillable, no driver-side graph.
-   Rounds needed = graph diameter; ideal for near-dup graphs (dense
-   clusters, diameter 2-4).
-2. ``connected_components_star`` — alternating large-star/small-star
-   (Kiveris et al., "Connected Components in MapReduce and Beyond",
-   SoCC'14): O(log² n) rounds regardless of diameter, so it also
-   handles adversarial chain graphs (a 1000-node path converges in
-   11 rounds where propagation needs 999). More shuffles per round,
-   so propagation can still win on tiny-diameter graphs.
+One kernel, alternating large-star/small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14): O(log² n)
+rounds regardless of graph diameter, so adversarial chain graphs
+converge as fast as dense near-dup clusters (a 1000-node path in ≤13
+rounds, where label propagation needs one round per hop).
 
 Per-round DataFrames are localCheckpoint'ed so lineage stays O(1)
 deep (no exponential re-execution under lazy eval); convergence is
-detected by counting changed labels (propagation, every 2 rounds to
-halve driver round-trips) or by an edge-set signature (star).
-
-Checkpoints are LAZY (eager=False, r15): every round is immediately
-followed by a driver action (the convergence count / signature
-collect), so the first action materializes the checkpoint inside its
-own job — an eager checkpoint ran the identical computation as a
-separate extra job per round for nothing.
+detected by an exact edge-set signature. Checkpoints are LAZY
+(eager=False): every round is immediately followed by the signature
+collect, so that action materializes the checkpoint inside its own
+job — an eager checkpoint would run the identical computation as a
+separate extra job per round.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def connected_components(
@@ -43,85 +30,15 @@ def connected_components(
     id_col: str,
     src: str,
     dst: str,
-    max_iter: int = 20,
-) -> DataFrame:
-    """→ [id_col, component] where component = min vertex id reachable
-    in the undirected graph (isolated vertices: their own id).
-    Raises if not converged within ``max_iter`` rounds.
-    """
-    sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .unionAll(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # localCheckpoint each round: ``labels`` appears twice per
-    # iteration (message build + update join), so the logical plan
-    # doubles every round — persist alone caches data but analysis/
-    # planning cost still grows 2^rounds. Checkpointing resets the
-    # plan to a leaf; on a real cluster use reliable checkpoint() to
-    # HDFS for fault tolerance instead.
-    labels = vertices.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("lbl")
-    ).localCheckpoint(eager=False)
-    # monotone fixpoint probe (r15): labels only ever DECREASE, so the
-    # rounds have converged exactly when sum(lbl) stops falling — one
-    # scalar per round from the same job that materializes the new
-    # labels, replacing the old left-join change-flag (which cost an
-    # extra join + broadcast build every round). decimal(38,0): exact
-    # for any realistic Σ of 64-bit ids.
-    def _lbl_sum(df: DataFrame):
-        [row] = df.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
-        ).collect()
-        return row["s"]
-
-    prev = _lbl_sum(labels)
-    try:
-        for rnd in range(1, max_iter + 1):
-            # min over {self} ∪ incoming neighbor labels in ONE
-            # groupBy: the self-label rides the union, so no second
-            # join is needed to keep message-less vertices or to
-            # apply least(lbl, mlbl)
-            msgs = sym.join(labels, sym["s"] == labels["id"]).select(
-                F.col("d").alias("id"), F.col("lbl")
-            )
-            upd = (
-                labels.unionAll(msgs)
-                .groupBy("id")
-                .agg(F.min("lbl").alias("lbl"))
-                .localCheckpoint(eager=False)
-            )
-            labels = upd
-            # convergence probed EVERY round: the probe is one tiny
-            # agg job over the just-checkpointed labels, while a
-            # wasted extra round costs a full shuffle plus a
-            # checkpoint — at any scale the probe is the cheaper side
-            # of that trade (near-dup graphs converge in 3-4 rounds)
-            cur = _lbl_sum(upd)
-            if cur == prev:
-                return labels.select(
-                    F.col("id").alias(id_col), F.col("lbl").alias("component")
-                )
-            prev = cur
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    finally:
-        sym.unpersist()
-
-
-def connected_components_star(
-    vertices: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src: str,
-    dst: str,
     max_iter: int = 25,
-    canonical: bool = False,
 ) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    SoCC'14) → [id_col, component] with component = min reachable id.
+    """Large-star/small-star connected components → [id_col,
+    component] with component = min reachable vertex id (isolated
+    vertices: their own id). Raises if not converged within
+    ``max_iter`` rounds.
 
-    Each round maps the canonical edge set E (u < v, distinct) through
-    large-star then small-star:
+    Each round maps the edge set E (oriented u < v) through large-star
+    then small-star:
 
       large-star(u): m = min(N(u) ∪ {u}); emit (m, v) for v ∈ N(u),
                      v > u — strictly-larger neighbors re-attach to
@@ -130,32 +47,23 @@ def connected_components_star(
                      neighbors of a, m = min(S); emit (m, a) and
                      (m, b) for b ∈ S∖{m}.
 
-    The fixpoint is one star per component centered at its minimum,
-    reached in O(log² n) rounds (11 for a 1000-node path). Both halves
-    preserve the canonical u < v orientation, so convergence is
-    detected by an exact set signature (count + sum of xxhash64) on
-    the checkpointed edge set — one tiny job per round.
+    Both minimums are window mins over the round's rows, so neither
+    needs a groupBy + self-join, and duplicate rows (from the input or
+    from large-star) change neither minimum: the only ``distinct`` is
+    the one ending the round. The fixpoint is one star per component
+    centered at its minimum. Both halves preserve the u < v
+    orientation, so convergence is detected by an exact set signature
+    (count + sum of xxhash64) on the checkpointed edge set — one tiny
+    job per round. Duplicate input edges cost at most one extra round.
     """
-    # ``canonical=True``: the caller guarantees edges are already
-    # distinct with src < dst (true for every grouped pair generator —
-    # jaccard/minhash/simhash emit one row per (da < db) group), so
-    # the least/greatest rewrite is the identity and the initial
-    # .distinct() would re-shuffle the ENTIRE edge set once for
-    # nothing (r15, guide §2.4: remove shuffles outright)
-    if canonical:
-        e = edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v")
-        ).localCheckpoint(eager=False)
-    else:
-        e = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("u"),
-                F.greatest(F.col(src), F.col(dst)).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)
+    e = (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
         )
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=False)
+    )
 
     def signature(df: DataFrame) -> tuple:
         [row] = df.agg(
@@ -168,28 +76,21 @@ def connected_components_star(
     sig = signature(e)
     for _ in range(max_iter):
         sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        ls_min = sym.groupBy("u").agg(F.min("v").alias("mn"))
         large = (
-            sym.join(ls_min, "u")
+            sym.withColumn("mn", F.min("v").over(Window.partitionBy("u")))
             .where(F.col("v") > F.col("u"))
+            .select(F.least("mn", "u").alias("u"), F.col("v"))
+        )
+        # small-star over larger→smaller orientation (v is the larger
+        # endpoint, its smaller neighbors are the u's): the center edge
+        # (mn, v) and the member edge (mn, u), minus the self-loop
+        # (mn, mn)
+        e = (
+            large.withColumn("mn", F.min("u").over(Window.partitionBy("v")))
             .select(
-                F.least("mn", "u").alias("u"),
-                F.col("v"),
+                F.col("mn").alias("u"), F.explode(F.array("v", "u")).alias("v")
             )
             .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over larger→smaller orientation (u < v canonical:
-        # v is the larger endpoint, its smaller neighbors are the u's)
-        ss_min = large.groupBy("v").agg(F.min("u").alias("mn"))
-        center_edges = ss_min.select(F.col("mn").alias("u"), F.col("v"))
-        member_edges = (
-            large.join(ss_min, "v")
-            .where(F.col("u") != F.col("mn"))
-            .select(F.col("mn").alias("u"), F.col("u").alias("v"))
-        )
-        e = (
-            center_edges.unionAll(member_edges)
             .distinct()
             .localCheckpoint(eager=False)
         )
@@ -205,6 +106,4 @@ def connected_components_star(
                 )
             )
         sig = new_sig
-    raise RuntimeError(
-        f"connected_components_star: no fixpoint in {max_iter} rounds"
-    )
+    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")

@@ -37,7 +37,10 @@ from miba_2023_capstone_rb_nlp_spark import catalog
 from miba_2023_capstone_rb_nlp_spark.functions import text as T
 from miba_2023_capstone_rb_nlp_spark.functions.numeric import fixed, sql_fixed
 from miba_2023_capstone_rb_nlp_spark.suite import persist_tracked, register
-from miba_2023_capstone_rb_nlp_spark.suite.dedup import _SHINGLES
+from miba_2023_capstone_rb_nlp_spark.suite.dedup import (
+    _CC_CTES,
+    _near_dup_components,
+)
 
 
 def _docs(spark, sf_dir):
@@ -348,33 +351,7 @@ def q_contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # --- canonical corpus after near-dup removal ------------------------
-_CANON_ORACLE = f"""
-WITH RECURSIVE sh0 AS ({_SHINGLES}),
-sh AS (
-  SELECT doc, CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) AS hs FROM sh0
-),
-sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-inter AS (
-  SELECT a.doc AS da, b.doc AS db, count(*) AS inter
-  FROM sh a JOIN sh b ON a.hs = b.hs AND a.doc < b.doc
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT da, db FROM inter
-  JOIN sizes na ON inter.da = na.doc JOIN sizes nb ON inter.db = nb.doc
-  WHERE CAST(inter AS DOUBLE) / (na.n_sh + nb.n_sh - inter) >= 0.1
-),
-sym AS (
-  SELECT da AS s, db AS d FROM pairs
-  UNION ALL
-  SELECT db AS s, da AS d FROM pairs
-),
-cc(id, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT sym.d, cc.lbl FROM cc JOIN sym ON cc.id = sym.s
-),
-comp AS (SELECT id AS doc_id, min(lbl) AS component FROM cc GROUP BY id),
+_CANON_ORACLE = _CC_CTES + """,
 grp AS (
   SELECT component, CAST(count(*) AS BIGINT) AS n_docs
   FROM comp GROUP BY component
@@ -387,32 +364,12 @@ FROM grp g JOIN documents d ON d.doc_id = g.component
 @register("dedup_canonical_corpus", oracle=_CANON_ORACLE)
 def q_dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The query a user runs to EMIT the deduplicated corpus: n-gram
-    Jaccard pairs → large-star/small-star connected components →
-    keep the min-doc_id representative of each group, carrying how
-    many near-dups it absorbed.
-
-    This is the star variant's oracle-checked driver entry (the
-    propagation variant backs ``neardup_components``); both are
-    O(log²n)-vs-O(diameter) documented in dedup/components.py. The
-    final representative join is a plain equi-join on doc_id — group
-    count ≈ corpus size, so no broadcast assumption."""
-    from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components_star,
-    )
-    from miba_2023_capstone_rb_nlp_spark.dedup.jaccard import jaccard_pairs
-
+    Jaccard pairs → connected components → keep the min-doc_id
+    representative of each group, carrying how many near-dups it
+    absorbed. The final representative join is a plain equi-join on
+    doc_id — group count ≈ corpus size, so no broadcast assumption."""
     docs = _docs(spark, sf_dir)
-    edges = jaccard_pairs(
-        # budget pass skipped: this composed entry consumes the pairs
-        # downstream and its corpus is the bounded documents table;
-        # the default-on guard is exercised by ngram_jaccard_pairs
-        # and tests/test_knn_guard.py
-        docs, "text", "doc_id", n=3, threshold=0.1, candidate_budget=None
-    )
-    comp = connected_components_star(
-        docs.select("doc_id"), edges, id_col="doc_id", src="da", dst="db",
-        canonical=True,  # jaccard_pairs emits distinct da < db groups
-    )
+    comp = _near_dup_components(docs)
     grp = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_docs"))
     return docs.join(
         grp, docs["doc_id"] == grp["component"], "inner"
@@ -426,33 +383,7 @@ def q_dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct-token count: an INTEGER, so the cross-engine argmax cannot
 # be perturbed by float rounding; ties break to the larger doc_id in
 # both engines (struct-max in Spark, explicit ORDER BY in SQL).
-_QREP_ORACLE = f"""
-WITH RECURSIVE sh0 AS ({_SHINGLES}),
-sh AS (
-  SELECT doc, CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) AS hs FROM sh0
-),
-sizes AS (SELECT doc, count(*) AS n_sh FROM sh GROUP BY doc),
-inter AS (
-  SELECT a.doc AS da, b.doc AS db, count(*) AS inter
-  FROM sh a JOIN sh b ON a.hs = b.hs AND a.doc < b.doc
-  GROUP BY 1, 2
-),
-pairs AS (
-  SELECT da, db FROM inter
-  JOIN sizes na ON inter.da = na.doc JOIN sizes nb ON inter.db = nb.doc
-  WHERE CAST(inter AS DOUBLE) / (na.n_sh + nb.n_sh - inter) >= 0.1
-),
-sym AS (
-  SELECT da AS s, db AS d FROM pairs
-  UNION ALL
-  SELECT db AS s, da AS d FROM pairs
-),
-cc(id, lbl) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT sym.d, cc.lbl FROM cc JOIN sym ON cc.id = sym.s
-),
-comp AS (SELECT id AS doc_id, min(lbl) AS component FROM cc GROUP BY id),
+_QREP_ORACLE = _CC_CTES + """,
 qual AS (
   SELECT doc_id, len(list_distinct(string_split(text, ' '))) AS n_unique
   FROM documents
@@ -476,28 +407,14 @@ FROM ranked WHERE rk = 1
 @register("quality_representative_dedup", oracle=_QREP_ORACLE)
 def q_quality_representative_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup groups keep their best member: jaccard pairs →
-    large-star/small-star CC → per-component argmax on distinct-token
+    connected components → per-component argmax on distinct-token
     count via a single struct-max aggregate (no window sort, no
     per-component shuffle beyond the one groupBy). The oracle ranks
     with row_number; integer quality keeps both argmaxes identical."""
-    from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components_star,
-    )
-    from miba_2023_capstone_rb_nlp_spark.dedup.jaccard import jaccard_pairs
     from miba_2023_capstone_rb_nlp_spark.functions.text import tokens
 
     docs = _docs(spark, sf_dir)
-    edges = jaccard_pairs(
-        # budget pass skipped: this composed entry consumes the pairs
-        # downstream and its corpus is the bounded documents table;
-        # the default-on guard is exercised by ngram_jaccard_pairs
-        # and tests/test_knn_guard.py
-        docs, "text", "doc_id", n=3, threshold=0.1, candidate_budget=None
-    )
-    comp = connected_components_star(
-        docs.select("doc_id"), edges, id_col="doc_id", src="da", dst="db",
-        canonical=True,  # jaccard_pairs emits distinct da < db groups
-    )
+    comp = _near_dup_components(docs)
     qual = docs.select(
         "doc_id",
         F.size(F.array_distinct(tokens(F.col("text")))).alias("n_unique"),

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from miba_2023_capstone_rb_nlp_spark import catalog
+from miba_2023_capstone_rb_nlp_spark.dedup.components import connected_components
 from miba_2023_capstone_rb_nlp_spark.dedup.exact import exact_dedup
 from miba_2023_capstone_rb_nlp_spark.dedup.jaccard import jaccard_pairs
 from miba_2023_capstone_rb_nlp_spark.dedup.minhash import (
@@ -177,7 +178,12 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- near-dup connected components (pairs → groups) -----------------
-_CC_ORACLE = f"""
+# pairs → components, shared by every near-dup grouping oracle
+# (neardup_components here, dedup_canonical_corpus and
+# quality_representative_dedup in suite/curation.py): the recursive
+# CTE is the plain min-label fixpoint, a reference independent of the
+# engine's large-star/small-star kernel
+_CC_CTES = f"""
 WITH RECURSIVE sh0 AS ({_SHINGLES}),
 sh AS (
   SELECT doc, CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) AS hs FROM sh0
@@ -203,7 +209,9 @@ cc(id, lbl) AS (
   UNION
   SELECT sym.d, cc.lbl FROM cc JOIN sym ON cc.id = sym.s
 ),
-comp AS (SELECT id AS doc_id, min(lbl) AS component FROM cc GROUP BY id)
+comp AS (SELECT id AS doc_id, min(lbl) AS component FROM cc GROUP BY id)"""
+
+_CC_ORACLE = _CC_CTES + """
 SELECT c.doc_id, c.component, s.comp_size
 FROM comp c
 JOIN (SELECT component, count(*) AS comp_size FROM comp GROUP BY component) s
@@ -211,27 +219,28 @@ JOIN (SELECT component, count(*) AS comp_size FROM comp GROUP BY component) s
 """
 
 
-@register("neardup_components", oracle=_CC_ORACLE)
-def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate GROUPS from the n-gram-Jaccard pair graph: distributed
-    min-label propagation (dedup/components.py) vs a recursive-CTE
-    oracle. component = min doc_id of the group; every doc appears
-    (isolated docs form singleton components)."""
-    from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components,
-    )
-
-    docs = _docs(spark, sf_dir)
+def _near_dup_components(docs: DataFrame) -> DataFrame:
+    """→ [doc_id, component]: n-gram Jaccard pairs (n=3, ≥0.1) →
+    connected components, component = min doc_id of the group; every
+    doc appears (isolated docs form singleton components)."""
     edges = jaccard_pairs(
-        # budget pass skipped: this composed entry consumes the pairs
-        # downstream and its corpus is the bounded documents table;
-        # the default-on guard is exercised by ngram_jaccard_pairs
-        # and tests/test_knn_guard.py
+        # budget pass skipped: the near-dup grouping entries consume
+        # the pairs downstream and their corpus is the bounded
+        # documents table; the default-on guard is exercised by
+        # ngram_jaccard_pairs and tests/test_knn_guard.py
         docs, "text", "doc_id", n=3, threshold=0.1, candidate_budget=None
     )
-    comp = connected_components(
+    return connected_components(
         docs.select("doc_id"), edges, id_col="doc_id", src="da", dst="db"
     )
+
+
+@register("neardup_components", oracle=_CC_ORACLE)
+def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate GROUPS from the n-gram-Jaccard pair graph with each
+    group's size: large-star/small-star connected components
+    (dedup/components.py) vs a recursive-CTE oracle."""
+    comp = _near_dup_components(_docs(spark, sf_dir))
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("comp_size"))
     return comp.join(sizes, "component", "inner").select(
         "doc_id", "component", "comp_size"

@@ -7,8 +7,8 @@ iteration count and quantizing between rounds: each round's rank is
 floor-quantized at 1e-9 and each edge contribution at 1e-12 before an
 exact DECIMAL sum, so both engines walk bit-identical states and the
 SQL oracle is the same recursion unrolled (the dedup/components.py
-convergence machinery handles the run-to-fixpoint variants; this
-module pins the deterministic fixed-round shape).
+kernel is the one run-to-fixpoint loop; this module pins the
+deterministic fixed-round shape).
 """
 
 from __future__ import annotations
@@ -374,7 +374,7 @@ def q_trade_hops_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow. UNION ALL recursion enumerates paths, not nodes — correct
     here because the hop cap bounds the blowup and min(hop)/count(*)
     want multiplicity; an unbounded reachability over a large vertex
-    set belongs to the frontier-dedup'ing connected-components kernels
+    set belongs to the frontier-dedup'ing connected-components kernel
     (dedup/components.py), not a recursive CTE. Reference has no graph
     surface; this pins the engine's SQL-standard recursion."""
     li = catalog.table(spark, sf_dir, "lineitem").select(

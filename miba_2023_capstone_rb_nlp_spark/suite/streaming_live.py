@@ -318,7 +318,7 @@ def merge_user_state(base: DataFrame, agg: DataFrame) -> DataFrame:
     merge must keep matching that group across batches too — a plain
     equi-join never matches NULL keys and would fragment them into
     one state row per micro-batch (ADVICE r6 #1; pinned by
-    tests/test_guards_r7.py). <=> is still an equi-predicate, so the
+    tests/test_merge_layout.py). <=> is still an equi-predicate, so the
     SortMergeJoin over the bucketed base is unchanged."""
     s, g = base.alias("s"), agg.alias("g")
     return s.join(

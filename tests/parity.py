@@ -10,6 +10,7 @@ would break the driver's hash breaks here first.
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import numpy as np
@@ -27,6 +28,15 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
+
+
+def write_table(spark, tmp_path, name: str, df) -> str:
+    """Write ``df`` as ``<tmp_path>/<name>.parquet`` (one file) and
+    return the directory, to stand in for an sf_dir."""
+    df.coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(str(tmp_path), f"{name}.parquet")
+    )
+    return str(tmp_path)
 
 
 def _canon_value(v):

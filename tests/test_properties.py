@@ -123,9 +123,9 @@ def test_to_matrix_empty_and_shapes():
 
 
 def test_connected_components_long_chain_and_isolates(spark):
-    """A 12-node path graph (needs ~11 propagation rounds — stresses
-    the iteration/convergence logic, unlike the shallow near-dup
-    fixtures) plus isolated vertices."""
+    """A 12-node path graph (one label-propagation round per hop would
+    need 11 — stresses the iteration/convergence logic, unlike the
+    shallow near-dup fixtures) plus isolated vertices."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
         connected_components,
     )
@@ -143,41 +143,54 @@ def test_star_components_path_1000(spark):
     """Large-star/small-star must crack a 1000-node path graph within
     ~12 rounds (propagation would need 999) — the O(log² n) claim."""
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
-        connected_components_star,
+        connected_components,
     )
 
     verts = spark.range(0, 1000).withColumnRenamed("id", "doc_id")
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(999)], "da bigint, db bigint"
     )
-    out = connected_components_star(
-        verts, edges, "doc_id", "da", "db", max_iter=13
-    )
+    out = connected_components(verts, edges, "doc_id", "da", "db", max_iter=13)
     comps = {r["component"] for r in out.collect()}
     assert comps == {0}
     assert out.count() == 1000
 
 
-def test_star_components_match_propagation(spark):
-    """Both algorithms agree on a multi-component graph with isolates,
-    duplicate and reversed edges, and self-loops."""
+def _union_find_components(n: int, edges: list[tuple[int, int]]) -> list:
+    parent = list(range(n))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # root = min id of the set
+    return [(i, find(i)) for i in range(n)]
+
+
+def test_connected_components_match_union_find(spark):
+    """The kernel agrees with a pure-Python union-find on a
+    multi-component graph with isolates, duplicate and reversed edges
+    and a self-loop, and on an empty edge set (every vertex its own
+    component)."""
     import random
 
     from miba_2023_capstone_rb_nlp_spark.dedup.components import (
         connected_components,
-        connected_components_star,
     )
 
     rng = random.Random(11)
     edges_py = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
     edges_py += [(5, 5), (10, 3), (3, 10)]  # self-loop + reversed dup
     verts = spark.range(0, 100).withColumnRenamed("id", "doc_id")
-    edges = spark.createDataFrame(edges_py, "da bigint, db bigint")
-    a = connected_components(verts, edges, "doc_id", "da", "db", max_iter=30)
-    b = connected_components_star(verts, edges, "doc_id", "da", "db")
-    ga = sorted((r["doc_id"], r["component"]) for r in a.collect())
-    gb = sorted((r["doc_id"], r["component"]) for r in b.collect())
-    assert ga == gb
+    for case in (edges_py, []):
+        edges = spark.createDataFrame(case, "da bigint, db bigint")
+        out = connected_components(verts, edges, "doc_id", "da", "db")
+        got = sorted((r["doc_id"], r["component"]) for r in out.collect())
+        assert got == _union_find_components(100, case)
 
 
 @given(
