@@ -9,7 +9,8 @@ the regression gate. End-to-end regressions are judged by
 BENCHMARK.json). Per-entry regressions are judged from the work
 counters this run writes to ``bench_detail_sf<sf>.json``: the jobs,
 stages, executor CPU seconds and shuffle MB of each entry's best rep,
-read from Spark's status store. Those counters barely move with host
+read from Spark's status store, and the seconds its builder took to
+return the lazy plan (``build_s``). Those counters barely move with host
 load, while a full sweep's wall total swings 10-25 s between windows
 of one day on a shared host.
 
@@ -106,16 +107,29 @@ def session_setup(spark, folded: list[str]) -> dict:
     }
 
 
+def run_entry(spark, fn, sf_dir: str) -> float:
+    """Build ``fn``'s plan and run it through the noop sink; return the
+    seconds the build took: the builder call up to the returned lazy
+    DataFrame, eager actions inside the builder included."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    build = time.perf_counter() - t0
+    df.write.format("noop").mode("overwrite").save()
+    return build
+
+
 def timed_rep(status: SparkStatus, action) -> tuple[float, dict]:
     """Run ``action`` once; return its wall seconds and its work
     ledger: the jobs and stages it started, and the executor CPU
-    seconds and shuffle read+write MB of those stages. Spark work is
-    synchronous under an action, so the stage ids allocated between
-    the two watermarks are exactly this rep's; the status store is
-    read after the timed region, once the listener bus has drained."""
+    seconds and shuffle read+write MB of those stages, plus
+    ``build_s`` when ``action`` returns its build seconds (as
+    ``run_entry`` does). Spark work is synchronous under an action, so
+    the stage ids allocated between the two watermarks are exactly
+    this rep's; the status store is read after the timed region, once
+    the listener bus has drained."""
     stage0, job0, _ = status.marks()
     t0 = time.perf_counter()
-    action()
+    build = action()
     wall = time.perf_counter() - t0
     stage1, job1, _ = status.marks()
     status.drain()
@@ -125,12 +139,15 @@ def timed_rep(status: SparkStatus, action) -> tuple[float, dict]:
         if st:
             cpu += st["cpu_s"]
             shuffle += st["shuffle_mb"]
-    return wall, {
+    ledger = {
         "jobs": job1 - job0,
         "stages": stage1 - stage0,
         "cpu_s": round(cpu, 3),
         "shuffle_mb": round(shuffle, 3),
     }
+    if build is not None:
+        ledger["build_s"] = round(build, 3)
+    return wall, ledger
 
 
 def encode_line(timings: dict[str, float],
@@ -221,10 +238,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     details: dict[str, dict] = {}
     for name, q in suite.items():
-        def action(q=q) -> None:
-            q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-
-        reps = [timed_rep(status, action) for _ in range(REPS)]
+        reps = [
+            timed_rep(status, lambda: run_entry(spark, q.fn, SF_DIR))
+            for _ in range(REPS)
+        ]
         best, ledger = min(reps, key=lambda r: r[0])
         timings[name] = round(best, 3)
         details[name] = {

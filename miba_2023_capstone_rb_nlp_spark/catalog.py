@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,6 +55,23 @@ def sf_name(sf_dir: str) -> str:
     return f"{safe}_{hashlib.md5(norm.encode()).hexdigest()[:6]}"
 
 
+def _files_stamp(path: str, base: str) -> str:
+    """The (path relative to ``base``, size, mtime_ns) of every data
+    file at ``path`` (one file, or every file under a directory), in
+    sorted order; "" when nothing is there."""
+    paths: list[str] = []
+    if os.path.isdir(path):
+        for root, _dirs, files in os.walk(path):
+            paths.extend(os.path.join(root, f) for f in files)
+    elif os.path.exists(path):
+        paths.append(path)
+    out = []
+    for fp in sorted(paths):
+        st = os.stat(fp)
+        out.append(f"{os.path.relpath(fp, base)}:{st.st_size}:{st.st_mtime_ns};")
+    return "".join(out)
+
+
 def source_fingerprint(sf_dir: str, *names: str) -> str:
     """Cheap content fingerprint of source parquet tables: the
     (relative path, size, mtime_ns) of every data file, md5-hashed.
@@ -65,14 +83,8 @@ def source_fingerprint(sf_dir: str, *names: str) -> str:
 
     h = hashlib.md5()
     for name in names:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        paths: list[str] = []
-        if os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                paths.extend(os.path.join(root, f) for f in files)
-        elif os.path.exists(p):
-            paths.append(p)
-        if not paths:
+        stamp = _files_stamp(os.path.join(sf_dir, f"{name}.parquet"), sf_dir)
+        if not stamp:
             # a missing source must raise, not hash to the shared
             # empty-input sentinel — that constant would alias every
             # absent table into one cache key (false layout currency,
@@ -81,13 +93,50 @@ def source_fingerprint(sf_dir: str, *names: str) -> str:
                 f"source_fingerprint: no files for table {name!r} "
                 f"under {sf_dir!r}"
             )
-        for fp in sorted(paths):
-            st = os.stat(fp)
-            h.update(
-                f"{os.path.relpath(fp, sf_dir)}:{st.st_size}"
-                f":{st.st_mtime_ns};".encode()
-            )
+        h.update(stamp.encode())
     return h.hexdigest()
+
+
+# Inferred parquet schemas keyed by (absolute path, fingerprint of its
+# files, nanosAsLong). Inference is a footer-reading Spark job per
+# read; a read with a known schema launches none. Bounded like
+# relational._BASKET_GUARD_MEMO: the oldest entry goes first.
+_SCHEMA_MEMO: dict[tuple[str, str, str | None], StructType] = {}
+_SCHEMA_MEMO_MAX = 64
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without re-inferring a schema it
+    has already inferred: the package's one batch parquet read path.
+
+    The first read of a file set infers its schema (one Spark job) and
+    memoizes the ``StructType``; later reads pass it back through
+    ``spark.read.schema``, which launches no job. The key holds the
+    file set's fingerprint (relative path, size and mtime_ns of every
+    data file), so a rewritten table is inferred again and writers
+    need no invalidation; and it holds
+    ``spark.sql.legacy.parquet.nanosAsLong``, which decides whether a
+    TIMESTAMP(NANOS) column infers as ``bigint``. A path with no local
+    files (a glob, a URI, a missing path) is read plainly, so Spark
+    resolves it and raises as before."""
+    import hashlib
+
+    stamp = _files_stamp(path, path)
+    if not stamp:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        hashlib.md5(stamp.encode()).hexdigest(),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    while len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+        _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+    _SCHEMA_MEMO[key] = df.schema
+    return df
 
 
 _FINGERPRINT_FILE = "_LAYOUT_FINGERPRINT"
@@ -141,6 +190,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Parquet scan → Catalyst gets free column pruning
     and predicate pushdown; never collect here.
 
+    The read goes through ``read_parquet``, the package's one parquet
+    read path, after the confs below are set: the first read of a
+    table infers its schema (one Spark job), every later read reuses
+    the memoized ``StructType`` and launches no job. The memo key is
+    (absolute path, fingerprint of the table's files, nanosAsLong), so
+    a rewritten file gets a new fingerprint and is inferred again.
+
     SIDE EFFECT (intentional, session-global): sets
     ``spark.sql.session.timeZone=UTC`` (plus nanosAsLong + Arrow) on
     the passed session. Timestamp semantics of the whole engine are
@@ -162,7 +218,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # window/date boundaries must be TZ-independent (oracle compares
     # naive timestamps); UTC regardless of the host session's default
     _set_utc(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_ts(df)
     return df

@@ -18,6 +18,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from miba_2023_capstone_rb_nlp_spark.catalog import read_parquet
 from miba_2023_capstone_rb_nlp_spark.operators.cleaning import clean_articles
 from miba_2023_capstone_rb_nlp_spark.operators.pipeline import assemble_articles
 from miba_2023_capstone_rb_nlp_spark.sources.content import fetch_content
@@ -63,7 +64,7 @@ class PipelineExecutor:
         raw_path, clean_path = self._paths(query, max_articles)
         # S1 cache probe (pipeline_executor.py:100-101)
         if not overwrite and os.path.exists(clean_path):
-            return self.spark.read.parquet(clean_path)
+            return read_parquet(self.spark, clean_path)
         links = get_all_links(
             self.spark, self.sources, query, max_articles, **kw
         ).cache()
@@ -77,10 +78,10 @@ class PipelineExecutor:
 
         raw = raw.withColumn("article_index", md5_long(F.col("se_link")))
         raw.write.mode("overwrite").parquet(raw_path)  # S2
-        raw = self.spark.read.parquet(raw_path)
+        raw = read_parquet(self.spark, raw_path)
         clean = clean_articles(raw.drop("pos", "bs_link", "n3k_link"))
         clean.write.mode("overwrite").parquet(clean_path)  # S3
-        return self.spark.read.parquet(clean_path)
+        return read_parquet(self.spark, clean_path)
 
 
 def main() -> None:  # S10 CLI (pipeline_executor.py:131-144)

@@ -125,13 +125,3 @@ def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
         "content",
         F.posexplode(frames).alias("sample_pos", "frame_index"),
     )
-
-
-def metadata_summary(df: DataFrame) -> DataFrame:
-    """Metadata-only aggregate — never touches the binary column, so
-    the parquet scan prunes it (verify via ReadSchema in .explain)."""
-    return df.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(F.col("meta.width").cast("double")).alias("avg_width"),
-        F.max("meta.n_frames").alias("max_frames"),
-    )

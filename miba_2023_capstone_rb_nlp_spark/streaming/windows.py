@@ -21,20 +21,3 @@ def tumbling_counts(
         .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n", "sum_value")
     )
-
-
-def session_stats(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value"))
-        .select(
-            "user_id",
-            F.col("sw.start").alias("session_start"),
-            F.col("sw.end").alias("session_end"),
-            "n",
-            "sum_value",
-        )
-    )

@@ -135,7 +135,7 @@ def q_knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = write_ivf_layout(spark, sf_dir)
     # partition-column values come back from directory names; cast to
     # the catalog schema's INT so the output schema is unchanged
-    corpus = spark.read.parquet(path).withColumn(
+    corpus = catalog.read_parquet(spark, path).withColumn(
         "label", F.col("label").cast("int")
     )
     queries = _emb(spark, sf_dir).filter(F.col("vec_id") % 100 == 0)

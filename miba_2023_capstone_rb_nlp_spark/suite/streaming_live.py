@@ -18,7 +18,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from miba_2023_capstone_rb_nlp_spark.catalog import _set_utc, normalize_event_ts
+from miba_2023_capstone_rb_nlp_spark.catalog import (
+    _set_utc,
+    normalize_event_ts,
+    read_parquet,
+)
 from miba_2023_capstone_rb_nlp_spark.streaming.windows import tumbling_counts
 from miba_2023_capstone_rb_nlp_spark.suite import register
 from miba_2023_capstone_rb_nlp_spark.suite.events import _TUMBLING_ORACLE
@@ -32,6 +36,8 @@ _TABLE = "events_tumbling_stream_result"
 # partitioning, not the session shuffle conf (which _state_partitions
 # deliberately overrides).
 STATE_PARTITIONS = 8
+
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 class _state_partitions:
@@ -48,30 +54,49 @@ class _state_partitions:
     apparent RocksDB edge in one ordering was warm-JVM bias, gone
     when the arms swap). RocksDB becomes the right provider only when
     per-partition state outgrows executor memory (bounded heap,
-    incremental snapshots) — the corpus-scale swap, not a local win."""
+    incremental snapshots) — the corpus-scale swap, not a local win.
 
-    def __init__(self, spark: SparkSession, n: int | None = None):
+    ``final_batch=False`` also turns off the no-data micro-batch for
+    streams started in the block. After an availableNow drain that
+    batch has 0 input rows; it only advances the watermark and evicts
+    state. Drop it only where every output row is emitted in the batch
+    that reads its input (a complete-mode aggregate, an inner join),
+    never where the watermark itself releases rows (append-mode
+    windows, event-time timeouts)."""
+
+    def __init__(self, spark: SparkSession, n: int | None = None,
+                 final_batch: bool = True):
         self.spark = spark
-        self.n = str(n if n is not None else STATE_PARTITIONS)
+        self.confs = {"spark.sql.shuffle.partitions":
+                      str(n if n is not None else STATE_PARTITIONS)}
+        if not final_batch:
+            self.confs[_NO_DATA_BATCHES] = "false"
 
     def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
+        self.prev = {k: self.spark.conf.get(k) for k in self.confs}
+        for k, v in self.confs.items():
+            self.spark.conf.set(k, v)
 
     def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+        for k, v in self.prev.items():
+            self.spark.conf.set(k, v)
+
+
+def _events_schema(spark: SparkSession, sf_dir: str):
+    """The raw events schema for a file-stream source: ts arrives as
+    long nanos under spark.sql.legacy.parquet.nanosAsLong (converted
+    like catalog.py by normalize_event_ts). The confs are set here too
+    so each entry is order-independent under an external session that
+    has not touched the catalog yet; the schema comes from the
+    catalog's memoized read, so only a table's first read infers it."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    _set_utc(spark)  # warn-once UTC pin (catalog policy)
+    return read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
 
 
 @register("events_tumbling_streaming", oracle=_TUMBLING_ORACLE)
 def q_events_tumbling_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = os.path.join(sf_dir, "events.parquet")
-    # schema from a batch probe (ts arrives as long nanos under
-    # spark.sql.legacy.parquet.nanosAsLong, converted like catalog.py);
-    # conf set here too so this query is order-independent under an
-    # external session that has not touched the catalog yet
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _set_utc(spark)  # warn-once UTC pin (catalog policy)
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _events_schema(spark, sf_dir)
     # FileStreamSource rejects a bare file path ("basePath must be a
     # directory") but accepts a glob that matches it
     stream = (
@@ -108,10 +133,7 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle proves the duplicates actually died. State for event-times
     older than the watermark is evicted, which is what makes this
     viable on an unbounded 100 TB/day feed."""
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _set_utc(spark)  # warn-once UTC pin (catalog policy)
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _events_schema(spark, sf_dir)
 
     def read():
         # project to the three columns the query touches (dedup key,
@@ -129,20 +151,18 @@ def q_events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled = read().unionByName(read())
     deduped = doubled.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
     counts = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    with _state_partitions(spark):
+    # final_batch=False: after the drain, the no-data batch (0 input
+    # rows) re-ran the complete-mode aggregate over the full dedup
+    # state and rewrote the sink with identical rows. availableNow
+    # still honours source rate limits, which the deprecated
+    # Trigger.Once ignored. (The cheap-state complete-mode drains —
+    # tumbling, stream-static — were measured a wash and keep it.)
+    with _state_partitions(spark, final_batch=False):
         query = (
             counts.writeStream.outputMode("complete")
-            # r16: Trigger.Once — the availableNow finalize batch
-            # (0 input rows) re-ran the complete-mode aggregate over
-            # the full dedup state and rewrote the sink with
-            # identical rows; one batch drains the bounded source.
-            # Verified row-identical at sf0.01/sf0.1; min-of-4
-            # interleaved 1.149 -> 0.832 s. (The cheap-state
-            # complete-mode drains — tumbling, stream-static — were
-            # measured a wash and stay on availableNow.)
             .format("memory")
             .queryName(_DEDUP_TABLE)
-            .trigger(once=True)
+            .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
@@ -155,10 +175,8 @@ def _split_events(spark: SparkSession, sf_dir: str):
     cross-batch state. Cache key includes a content fingerprint of the
     source (mtime + size) so regenerated testdata at the same path
     invalidates it. → (raw_schema, split_dir)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _set_utc(spark)  # warn-once UTC pin (catalog policy)
+    raw_schema = _events_schema(spark, sf_dir)
     path = os.path.join(sf_dir, "events.parquet")
-    batch = spark.read.parquet(path)
     sf_key = os.path.basename(sf_dir.rstrip("/"))
     st = os.stat(path)
     fingerprint = f"{int(st.st_mtime)}_{st.st_size}"
@@ -171,8 +189,9 @@ def _split_events(spark: SparkSession, sf_dir: str):
     if not os.path.isdir(split_dir) or not any(
         f.endswith(".parquet") for f in os.listdir(split_dir)
     ):
-        batch.repartition(4).write.mode("overwrite").parquet(split_dir)
-    return batch.schema, split_dir
+        events = read_parquet(spark, path)
+        events.repartition(4).write.mode("overwrite").parquet(split_dir)
+    return raw_schema, split_dir
 
 
 _STATEFUL_TABLE = "events_stateful_running_result"
@@ -242,10 +261,7 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted pairs equal the batch/oracle interval join exactly."""
     from miba_2023_capstone_rb_nlp_spark.streaming.joins import interval_join
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _set_utc(spark)  # warn-once UTC pin (catalog policy)
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _events_schema(spark, sf_dir)
 
     def read(event_type):
         s = normalize_event_ts(
@@ -266,19 +282,17 @@ def q_events_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l.event_id").alias("view_id"),
         F.col("r.event_id").alias("click_id"),
     )
-    with _state_partitions(spark):
+    # final_batch=False: an INNER symmetric-hash join emits every
+    # match in the batch that processes it; the no-data batch after
+    # the drain only advanced the watermark and evicted state, a full
+    # extra planning+state-commit round (~30% of the drain) that
+    # appended nothing.
+    with _state_partitions(spark, final_batch=False):
         query = (
             joined.writeStream.outputMode("append")
-            # r16: Trigger.Once — an INNER symmetric-hash join emits
-            # every match in the batch that processes it; the
-            # availableNow finalize batch (0 input rows) only
-            # advanced the watermark and evicted state, costing a
-            # full extra planning+state-commit round (~30% of the
-            # drain) while appending nothing. Verified: identical 762
-            # rows both ways at sf0.1, exceptAll diff 0.
             .format("memory")
             .queryName(_SSJ_TABLE)
-            .trigger(once=True)
+            .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
@@ -560,10 +574,7 @@ def q_events_stream_static_join(
     from miba_2023_capstone_rb_nlp_spark import catalog
     from miba_2023_capstone_rb_nlp_spark.functions.numeric import dsum
 
-    path = os.path.join(sf_dir, "events.parquet")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    _set_utc(spark)  # warn-once UTC pin (catalog policy)
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _events_schema(spark, sf_dir)
     stream = spark.readStream.schema(raw_schema).parquet(
         os.path.join(sf_dir, "events.*")
     )

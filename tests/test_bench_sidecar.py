@@ -88,3 +88,22 @@ def test_ledger_counts_the_stages_and_shuffle_a_repartition_adds(spark):
     _, more = bench.timed_rep(status, shuffled)
     assert more["stages"] > base["stages"]
     assert more["shuffle_mb"] > 0
+
+
+def test_ledger_records_the_builder_seconds(spark):
+    """``run_entry`` times the builder apart from the run: a builder
+    that sleeps 50 ms before returning its plan reads build_s >= 0.05,
+    and the build is part of the rep's wall time."""
+    import time
+
+    status = SparkStatus(spark)
+
+    def slow_builder(spark, sf_dir):
+        time.sleep(0.05)
+        return spark.range(200)
+
+    wall, ledger = bench.timed_rep(
+        status, lambda: bench.run_entry(spark, slow_builder, "unused")
+    )
+    assert 0.05 <= ledger["build_s"] <= wall
+    assert ledger["jobs"] >= 1

@@ -17,10 +17,7 @@ from miba_2023_capstone_rb_nlp_spark.streaming.ingest import (
     filtered_link_stream,
     read_link_stream,
 )
-from miba_2023_capstone_rb_nlp_spark.streaming.windows import (
-    session_stats,
-    tumbling_counts,
-)
+from miba_2023_capstone_rb_nlp_spark.streaming.windows import tumbling_counts
 from tests.conftest import SF_TEST_DIR
 
 
@@ -80,27 +77,6 @@ def test_streaming_tumbling_equals_batch(spark, tmp_path):
     want = tumbling_counts(ev).collect()  # same fn works on batch df
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) > 0
-
-
-def test_streaming_session_windows_run(spark, tmp_path):
-    ev = catalog.table(spark, SF_TEST_DIR, "events")
-    path = str(tmp_path / "events_parquet2")
-    ev.write.parquet(path)
-    stream = spark.readStream.schema(ev.schema).parquet(path)
-    out = session_stats(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("session_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from session_test")
-    assert got.count() > 0
-    # sessions are disjoint per user and end >= start + nothing negative
-    bad = got.filter(F.col("session_end") <= F.col("session_start")).count()
-    assert bad == 0
 
 
 def test_stream_stream_interval_join_plan_and_batch_parity(spark, tmp_path):
