@@ -10,6 +10,8 @@ phase 6).
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -18,6 +20,16 @@ def as_double(vec: Column) -> Column:
     """Cast array<float> → array<double> so accumulation happens in
     float64 (parity with the DuckDB oracle, which promotes to double)."""
     return vec.cast("array<double>")
+
+
+def double_array(values: Iterable[float]) -> Column:
+    """Constant ``array<double>`` in a few JVM calls: one comma-joined
+    string literal, split and cast. A Python list or ndarray literal
+    costs a JVM call per element, and an ``array(…)`` SQL literal one
+    analyzed node per element. Each value is written as its shortest
+    round-trip repr, which the cast parses back to the same double."""
+    text = ",".join(repr(float(x)) for x in values)
+    return F.split(F.lit(text), ",").cast("array<double>")
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -8,15 +8,12 @@ path): the fit is ONE mapInPandas pass emitting per-partition moments
 (n, Σx, XᵀX — a d×d matrix per partition, the classic combiner
 pattern), combined on the driver into the covariance whose
 eigendecomposition is a d×d numpy call. The projection is then a pure
-column expression (whole-stage codegen, no Python) over the input.
-MLlib's RowMatrix path schedules several jobs (tree-aggregated
-covariance + gram) and a row-at-a-time transform; this is one job +
-codegen, and the moments output is ~d² doubles per partition
-regardless of data size, so it holds at 100 TB unchanged. Dimension
-bounds: the moment pass carries d² doubles per partition (see
-``_moment_pass``), and the expression-tree projection is used only
-while d×k ≤ ``MAX_CODEGEN_DIM_TERMS`` — wider embeddings project via
-an Arrow-batched pandas UDF with identical accumulation order.
+column expression (no Python): per component one ``vectors.dot``
+against a constant weight array, so the expression does not grow
+with d. MLlib's RowMatrix path schedules several jobs
+(tree-aggregated covariance + gram) and a row-at-a-time transform;
+this is one job + codegen, and the moments output is ~d² doubles per
+partition regardless of data size (see ``_moment_pass``).
 
 Output column named ``reduced_dimensions`` — normalizing the
 reference's misleading ``*_word_embeddings`` suffix reuse
@@ -32,19 +29,10 @@ partitionings.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Codegen ceiling for the expanded projection expression: each output
-# component is a d-term multiply-add chain, so the expression tree has
-# d×k leaf pairs. Past a few hundred dims the generated method risks
-# the JVM's 64 KB bytecode-per-method limit and Spark silently falls
-# back out of whole-stage codegen (SURVEY notes the same hazard for
-# the 64-dim blas expressions). Above this bound the projection runs
-# as ONE Arrow-batched pandas UDF instead — same accumulation order
-# (left-assoc over dims), so results are bit-identical across paths.
-MAX_CODEGEN_DIM_TERMS = 2048  # d × k budget for the expression path
+from miba_2023_capstone_rb_nlp_spark.functions.vectors import dot, double_array
 
 
 def _moment_pass(fit_df: DataFrame, vec_col: str) -> tuple[int, np.ndarray, np.ndarray]:
@@ -146,34 +134,25 @@ def pca_reduce(
     d, k = w.shape
     # Mean-centering folded into per-component constants:
     #   Σᵢ (vᵢ−mᵢ)·wᵢⱼ ≡ Σᵢ vᵢ·wᵢⱼ − Σᵢ mᵢ·wᵢⱼ
-    # The offsets are computed ONCE here (left-assoc, the same order
-    # both execution paths accumulate in), halving the projection
-    # expression — plan compile time is the dominant cost of this
-    # query at bench scale, and every term removed is compile saved.
+    # The offsets are computed once here, left to right — the order
+    # ``dot`` accumulates the row side in.
     offsets = []
     for j in range(k):
         acc = 0.0
         for i in range(d):
             acc = acc + float(mean[i]) * float(w[i, j])
         offsets.append(acc)
-    if d * k > MAX_CODEGEN_DIM_TERMS:
-        return _project_pandas(df, vec_col, out_col, w, offsets)
     # cast the array ONCE into a temp column — inlining the cast into
-    # every v[i] reference would repeat it d×k times in the plan
+    # every dot would repeat it k times in the plan
     tmp = "_pca_cast_tmp"
     v = F.col(tmp)
     coords = F.array(
-        *[
-            sum(v[i] * F.lit(float(w[i, j])) for i in range(d))
-            - F.lit(offsets[j])
-            for j in range(k)
-        ]
+        *[dot(v, double_array(w[:, j])) - F.lit(offsets[j]) for j in range(k)]
     )
-    # Null semantics (explicit, both paths): a NULL or wrong-length
-    # vector yields a NULL output array — never a silent array of
-    # nulls (the fit already excludes NULL vectors; the old behavior
-    # produced garbage rows where MLlib failed loudly). Interior NULL
-    # elements still propagate per-component, as in any SQL sum.
+    # A NULL or wrong-length vector yields a NULL output array, never
+    # a silent array of nulls (the fit already excludes NULL
+    # vectors). Interior NULL elements still propagate per component,
+    # as in any SQL sum.
     return (
         df.withColumn(tmp, F.col(vec_col).cast("array<double>"))
         .withColumn(
@@ -182,43 +161,6 @@ def pca_reduce(
         )
         .drop(tmp)
     )
-
-
-def _project_pandas(
-    df: DataFrame, vec_col: str, out_col: str, w: np.ndarray, offsets: list
-) -> DataFrame:
-    """Arrow-batched projection for wide embeddings (d×k above the
-    codegen budget). Accumulates component sums dim-by-dim in the same
-    left-assoc order as the expression path and subtracts the same
-    driver-computed mean offsets, so the two paths are bit-identical;
-    NULL/wrong-length vectors yield NULL (same contract as the
-    expression path)."""
-    from pyspark.sql.types import ArrayType, DoubleType
-
-    d, k = w.shape
-    w_l, off_l = w.tolist(), list(offsets)  # ship plain lists, not np
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def proj(s: pd.Series) -> pd.Series:
-        ww = np.asarray(w_l)
-        off = np.asarray(off_l)
-        valid = np.array(
-            [vec is not None and len(vec) == d for vec in s], dtype=bool
-        )
-        out = [None] * len(s)
-        if valid.any():
-            x = np.stack(
-                [np.asarray(vec, dtype=np.float64) for vec in s[valid]]
-            )
-            acc = np.zeros((x.shape[0], k))
-            for i in range(d):  # left-assoc over dims == codegen order
-                acc = acc + x[:, i][:, None] * ww[i]
-            acc = acc - off
-            for pos, row in zip(np.nonzero(valid)[0], acc):
-                out[pos] = row.tolist()
-        return pd.Series(out)
-
-    return df.withColumn(out_col, proj(F.col(vec_col).cast("array<double>")))
 
 
 def umap_reduce(

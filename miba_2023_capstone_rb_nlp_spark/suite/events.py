@@ -922,158 +922,94 @@ def _rt_aggregate(back: DataFrame, extrema: bool = False) -> DataFrame:
     return back.groupBy("event_type").agg(*aggs)
 
 
-_JSON_RT_ORACLE = _rt_oracle()
+_RT_SCHEMA = "event_type string, user_id bigint, value double"
 
 
-@register("events_json_roundtrip", oracle=_JSON_RT_ORACLE)
-def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → JSON lines at rest → schema-on-read aggregate.
+def _roundtrip(
+    spark: SparkSession,
+    sf_dir: str,
+    fmt: str,
+    write_opts: dict | None = None,
+    read_opts: dict | None = None,
+    extrema: bool = False,
+) -> DataFrame:
+    """events → ``fmt`` at rest → explicit-schema read → the shared
+    fingerprint aggregate; the oracle aggregates the ORIGINAL parquet.
 
-    Plan: one parquet scan to lay the JSON copy (pruned to the three
-    needed columns BEFORE serialization — writing unread columns into
-    a text format is pure waste), then the JSON scan feeds a plain
-    partial-agg groupBy. The explicit read schema keeps the scan a
-    single pass; at scale the JSON copy is the upstream reality (logs,
-    API dumps), not something the engine writes itself.
-    """
-    import os
-
-    from miba_2023_capstone_rb_nlp_spark.catalog import warehouse_dir
-
+    Plan: pruned to the three needed columns BEFORE serialization
+    (unread columns in a text format are pure waste), and the read
+    pins an explicit schema so the scan is ONE pass — inference on a
+    text format costs a full extra pass over the data. The layout is
+    keyed by ``sf_name``, so two scale-factor directories that share
+    a basename never share a copy."""
     ev = catalog.table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value"
     )
-    path = warehouse_dir(
-        "json_events", os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    )
-    ev.write.mode("overwrite").json(path)
-    back = spark.read.schema(
-        "event_type string, user_id bigint, value double"
-    ).json(path)
-    return _rt_aggregate(back)
-
-
-# --- CSV source round-trip (schema-on-read, no inference) ------------
-# Same fingerprint aggregate as the JSON round-trip, so the check is
-# that the CSV text format — quoting, nulls-as-empty, full-precision
-# float repr — preserves the data exactly, per column type.
-_CSV_RT_ORACLE = _rt_oracle()
-
-
-@register("events_csv_roundtrip", oracle=_CSV_RT_ORACLE)
-def q_events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → CSV at rest (header, explicit quote/escape) →
-    EXPLICIT-schema read → aggregate; the oracle aggregates the
-    ORIGINAL parquet, so the entry proves the text round-trip is
-    lossless for every column type crossing it (strings with the
-    quote character, nullable bigints, full-precision doubles).
-
-    Plan: column-pruned before serialization (unread columns in a
-    text format are pure waste); the read pins an explicit schema so
-    the scan is ONE pass — schema inference on CSV costs a full extra
-    pass over the data at 100 TB, the classic silent 2× read. At
-    scale CSV is the upstream reality (exports, legacy feeds); the
-    engine's job is to cross it once and land columnar."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("csv_events", sf_name(sf_dir))
-    (
-        ev.write.mode("overwrite")
-        .options(header=True, quote='"', escape='"')
-        .csv(path)
+    path = catalog.warehouse_dir(f"{fmt}_events", catalog.sf_name(sf_dir))
+    ev.write.mode("overwrite").options(**(write_opts or {})).format(fmt).save(
+        path
     )
     back = (
-        spark.read.schema("event_type string, user_id bigint, value double")
-        .options(header=True, quote='"', escape='"')
-        .csv(path)
-    )
-    return _rt_aggregate(back)
-
-
-# --- ORC source round-trip (columnar at rest, schema pinned) ---------
-# Same fingerprint aggregate as the JSON/CSV round-trips: the entry
-# proves the engine can land and re-read the other mainstream
-# columnar format losslessly. ORC carries its own schema, but the
-# read still PINS one explicitly — a pipeline that trusts file-embedded
-# schemas silently widens/narrows when an upstream writer drifts.
-_ORC_RT_ORACLE = _rt_oracle(extrema=True)
-
-
-@register("events_orc_roundtrip", oracle=_ORC_RT_ORACLE)
-def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → ORC at rest → explicit-schema read → aggregate; the
-    oracle aggregates the ORIGINAL parquet. The extrema variant adds
-    raw per-group min/max doubles — bit-exact witnesses that the
-    quantized sum alone could not provide; the value-by-value
-    lossless proof (incl. NULLs) is the crafted-corpus test in
-    tests/test_roundtrip_formats.py.
-
-    Plan: column-pruned before serialization; the ORC scan is
-    columnar + vectorized like parquet (predicate pushdown and column
-    pruning both apply), so at 100 TB the only cost of the format
-    hop is the rewrite itself — reads stay scan-equivalent."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("orc_events", sf_name(sf_dir))
-    ev.write.mode("overwrite").orc(path)
-    back = spark.read.schema(
-        "event_type string, user_id bigint, value double"
-    ).orc(path)
-    return _rt_aggregate(back, extrema=True)
-
-
-# --- XML source round-trip (schema-on-read, no inference) ------------
-# Spark 4 ships the XML source natively. XML is the worst-case text
-# format (tags per value, entity escaping, absent-element nulls);
-# the shared fingerprint + extrema aggregate checks the crossing on
-# the synthetic corpus, the crafted-corpus test covers the escaping/
-# NULL paths this data never hits, and the explicit schema keeps the
-# read ONE pass exactly like the CSV/JSON twins (XML schema
-# inference is another full scan).
-_XML_RT_ORACLE = _rt_oracle(extrema=True)
-
-
-@register("events_xml_roundtrip", oracle=_XML_RT_ORACLE)
-def q_events_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events → XML at rest (rowTag per event) → EXPLICIT-schema read
-    → aggregate; the oracle aggregates the ORIGINAL parquet. What
-    THIS entry proves on the synthetic data: counts, distinct keys,
-    cent-exact totals, and bit-exact per-group min/max doubles
-    survive the crossing. What it cannot exercise here (the events
-    table has no NULL user_ids and no escapable characters) — NULL
-    keys as absent elements, entity escaping, value-by-value double
-    identity — is pinned by the crafted-corpus test in
-    tests/test_roundtrip_formats.py.
-
-    Plan: pruned to the three needed columns before serialization
-    (XML's per-value tag overhead makes unread columns even more
-    expensive than in CSV); explicit schema = ONE pass."""
-    from miba_2023_capstone_rb_nlp_spark.catalog import sf_name, warehouse_dir
-
-    ev = catalog.table(spark, sf_dir, "events").select(
-        "event_type", "user_id", "value"
-    )
-    path = warehouse_dir("xml_events", sf_name(sf_dir))
-    (
-        ev.write.mode("overwrite")
-        .option("rootTag", "events")
-        .option("rowTag", "event")
-        .format("xml")
-        .save(path)
-    )
-    back = (
-        spark.read.schema("event_type string, user_id bigint, value double")
-        .option("rowTag", "event")
-        .format("xml")
+        spark.read.schema(_RT_SCHEMA)
+        .options(**(read_opts or {}))
+        .format(fmt)
         .load(path)
     )
-    return _rt_aggregate(back, extrema=True)
+    return _rt_aggregate(back, extrema)
+
+
+@register("events_json_roundtrip", oracle=_rt_oracle())
+def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → JSON lines → schema-on-read aggregate. At scale the
+    JSON copy is the upstream reality (logs, API dumps), not something
+    the engine writes itself."""
+    return _roundtrip(spark, sf_dir, "json")
+
+
+# CSV: quoting, nulls-as-empty and full-precision float repr must
+# preserve the data exactly, per column type.
+_CSV_OPTS = {"header": True, "quote": '"', "escape": '"'}
+
+
+@register("events_csv_roundtrip", oracle=_rt_oracle())
+def q_events_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → CSV (header, explicit quote/escape) → aggregate: the
+    text round-trip is lossless for every column type crossing it
+    (strings with the quote character, nullable bigints,
+    full-precision doubles). At scale CSV is the upstream reality
+    (exports, legacy feeds); the engine crosses it once and lands
+    columnar."""
+    return _roundtrip(spark, sf_dir, "csv", _CSV_OPTS, _CSV_OPTS)
+
+
+@register("events_orc_roundtrip", oracle=_rt_oracle(extrema=True))
+def q_events_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → ORC → aggregate with raw per-group min/max doubles —
+    bit-exact witnesses the quantized sum alone could not provide.
+    ORC carries its own schema, but the read still PINS one: a
+    pipeline that trusts file-embedded schemas silently widens or
+    narrows when an upstream writer drifts. The ORC scan is columnar
+    and vectorized like parquet, so the format hop costs only the
+    rewrite."""
+    return _roundtrip(spark, sf_dir, "orc", extrema=True)
+
+
+@register("events_xml_roundtrip", oracle=_rt_oracle(extrema=True))
+def q_events_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events → XML (rowTag per event) → aggregate with extrema. XML
+    is the worst-case text format (tags per value, entity escaping,
+    absent-element nulls). The events table has no NULL user_ids and
+    no escapable characters, so NULL keys as absent elements, entity
+    escaping and value-by-value double identity are pinned by the
+    crafted-corpus test in tests/test_roundtrip_formats.py."""
+    return _roundtrip(
+        spark,
+        sf_dir,
+        "xml",
+        {"rootTag": "events", "rowTag": "event"},
+        {"rowTag": "event"},
+        extrema=True,
+    )
 
 
 # --- VariantType semi-structured extraction --------------------------

@@ -311,32 +311,55 @@ def test_pca_reduce_null_and_shortvec_semantics(spark):
         assert all(x is not None for x in out[i])
 
 
-def test_pca_pandas_fallback_matches_codegen_path(spark, monkeypatch):
-    """Wide-embedding projection (d×k over the codegen budget) must be
-    bit-identical to the expression path — same left-assoc
-    accumulation order — and carry the same NULL contract."""
-    import miba_2023_capstone_rb_nlp_spark.ml.reduce as reduce_mod
+def test_pca_wide_projection_matches_left_to_right_reference(spark):
+    """A projection with d×k above 2048 terms stays one JVM column
+    expression, is bit-identical to a plain left-to-right double
+    accumulation (0 + v0·w0 + v1·w1 … − offset, the offset summed the
+    same way), and keeps the NULL / wrong-length contract."""
+    from miba_2023_capstone_rb_nlp_spark.ml.reduce import pca_reduce
 
+    d, k = 700, 3
     rng = np.random.RandomState(11)
-    base = rng.randn(60, 16)
+    base = rng.randn(20, d)
+    mean, w = rng.randn(d), rng.randn(d, k)
     rows = [(i, row.tolist()) for i, row in enumerate(base)]
     rows += [(100, None), (101, [1.0, 2.0])]
     df = spark.createDataFrame(rows, "id bigint, v array<double>").repartition(3)
-    fit = spark.createDataFrame(rows[:60], "id bigint, v array<double>")
+    out = pca_reduce(df, "v", k, components=(mean, w))
 
-    via_expr = {r["id"]: r["reduced_dimensions"]
-                for r in reduce_mod.pca_reduce(df, "v", 3, fit_df=fit).collect()}
-    monkeypatch.setattr(reduce_mod, "MAX_CODEGEN_DIM_TERMS", 1)
-    via_pandas = {r["id"]: r["reduced_dimensions"]
-                  for r in reduce_mod.pca_reduce(df, "v", 3, fit_df=fit).collect()}
-    assert via_pandas[100] is None and via_pandas[101] is None
-    assert set(via_expr) == set(via_pandas)
-    for i in range(60):
-        assert via_expr[i] == via_pandas[i]  # bit-identical, not approx
+    def left_to_right(x, j):
+        acc = 0.0
+        for i in range(d):
+            acc = acc + float(x[i]) * float(w[i, j])
+        return acc
 
-    plan = reduce_mod.pca_reduce(df, "v", 3, fit_df=fit)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "ArrowEvalPython" in plan  # fallback really is the Arrow UDF
+    offsets = [left_to_right(mean, j) for j in range(k)]
+    got = {r["id"]: r["reduced_dimensions"] for r in out.collect()}
+    assert got[100] is None and got[101] is None
+    for i, row in enumerate(base):
+        assert got[i] == [left_to_right(row, j) - offsets[j] for j in range(k)]
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for marker in ("ArrowEvalPython", "BatchEvalPython"):
+        assert marker not in plan
+
+
+def test_double_array_literal_is_bit_identical(spark):
+    """The SQL-text weight literal round-trips every double exactly:
+    -0.0, subnormals, the extremes, NaN and the infinities."""
+    import struct
+
+    from miba_2023_capstone_rb_nlp_spark.functions.vectors import double_array
+
+    vals = [0.1, -0.0, 5e-324, 1e-300, -1.7976931348623157e308, 1 / 3,
+            2.0**53 + 2, float("nan"), float("inf"), float("-inf")]
+    vals += np.random.RandomState(1).randn(20).tolist()
+    got = spark.range(1).select(double_array(vals).alias("a")).first()["a"]
+
+    def bits(xs):
+        return [struct.pack("<d", x).hex() for x in xs]
+
+    assert bits(got) == bits(vals)
 
 
 def test_model_loader_called_once_per_partition_across_batches(spark, tmp_path):
@@ -711,14 +734,12 @@ def _hash_vectors(spark, texts, dim=8):
     return {r["id"]: list(r["hash_embedding"]) for r in out}
 
 
-def test_hash_embeddings_packed_kernel_exact_at_its_token_bound(spark):
-    """The packed kernel keeps bucket counts in 8-bit fields of a
-    bigint; bucket 7 sits at bits 56-63, so a positive count of 128
-    there reaches 2^63 and used to raise ARITHMETIC_OVERFLOW under
-    ANSI. ``w10`` is such a token. Rows of up to 127 tokens take the
-    packed path and longer rows the fold, so each row here is
-    compared with its twin of doubled counts, which the fold computes:
-    doubling every count leaves the normalized vector bit-identical."""
+def test_hash_embeddings_exact_past_127_repeats(spark):
+    """``w10`` hashes to bucket 7 with a positive sign, the field that
+    overflowed an 8-bit packed count at 128 repeats. Each row here is
+    compared with its twin of doubled counts: doubling every count
+    leaves the normalized vector bit-identical, so any count that is
+    wrapped, clipped or overflowed past 127 shows as a mismatch."""
     import hashlib
 
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
@@ -738,12 +759,72 @@ def test_hash_embeddings_packed_kernel_exact_at_its_token_bound(spark):
     assert vecs[1] == [0.0] * 7 + [1.0]
 
 
-def test_hash_embeddings_above_8_dims_take_the_fold(spark):
-    """dim > 8 no longer fits one bigint of 8-bit fields; it takes
-    the general fold instead of raising."""
+def test_hash_embeddings_above_8_dims_unit_norm(spark):
+    """dim > 8 runs the same kernel: unit-norm vectors of the asked
+    length, for a short row and a 300-token row."""
     texts = ["spark news stream spark", " ".join(f"w{i}" for i in range(300))]
     vecs = _hash_vectors(spark, texts, dim=16)
     assert len(vecs) == 2
     for v in vecs.values():
         assert len(v) == 16
         assert abs(sum(x * x for x in v) - 1.0) < 1e-4
+
+
+def _hash_vec_reference(text, dim, salt="", scale=6):
+    """md5 → bucket/sign → counts → left-to-right norm → floor
+    quantize, in plain Python doubles."""
+    import hashlib
+    import math
+
+    sums = [0] * dim
+    for tok in text.split(" "):
+        h = int(hashlib.md5((salt + tok).encode()).hexdigest()[:15], 16)
+        sums[h % dim] += 1 if (h >> 10) & 1 else -1
+    norm_sq = 0.0
+    for s in sums:
+        norm_sq = norm_sq + float(s) * s
+    n = math.sqrt(norm_sq)
+    f = float(10**scale)
+    return [float(math.floor(s / n * f)) / f if n > 0 else 0.0 for s in sums]
+
+
+@pytest.mark.parametrize("salt", ["", "w|"])
+def test_hash_embeddings_match_python_reference(spark, salt):
+    """Every dim and row length runs the one kernel; each vector is
+    bit-identical to the pure-Python reference, including rows past
+    127 tokens and rows that repeat one token."""
+    from miba_2023_capstone_rb_nlp_spark.ml.embeddings import hash_embeddings
+
+    dims = (1, 3, 8, 16, 64)
+    texts = [
+        "w10",
+        " ".join(["w10"] * 100 + [f"t{i}" for i in range(27)]),  # 127
+        " ".join(["alpha"] * 128),
+        " ".join(f"w{i % 37}" for i in range(300)),
+        " ".join(["alpha", "beta"] * 150),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id bigint, text string")
+    for dim in dims:
+        df = hash_embeddings(df, "text", "id", dim=dim, out_col=f"e{dim}", salt=salt)
+    for r in df.collect():
+        assert len(r["text"].split(" ")) in (1, 127, 128, 300)
+        for dim in dims:
+            want = _hash_vec_reference(r["text"], dim, salt)
+            assert list(r[f"e{dim}"]) == want, (r["id"], dim)
+
+
+def test_hash_embeddings_expression_size_independent_of_dim(spark):
+    """The analyzed expression has as many nodes at dim 64 as at dim
+    8: no per-dim unrolling, so build and codegen cost do not grow
+    with the embedding width."""
+    from miba_2023_capstone_rb_nlp_spark.ml.embeddings import hash_embeddings
+
+    df = spark.createDataFrame([(1, "a b")], "id bigint, text string")
+
+    def nodes(dim):
+        plan = hash_embeddings(df, "text", "id", dim=dim)._jdf.queryExecution(
+        ).analyzed()
+        exprs = plan.expressions()
+        return len(exprs.apply(exprs.size() - 1).treeString().splitlines())
+
+    assert nodes(64) == nodes(8)

@@ -98,3 +98,28 @@ def test_xml_roundtrip_lossless(spark, corpus, tmp_path):
         .format("xml").load(p)
     )
     _assert_lossless(spark, corpus, back)
+
+
+@pytest.mark.parametrize("fmt", ["json", "csv", "orc", "xml"])
+def test_roundtrip_layouts_keyed_per_sf_dir(spark, tmp_path, monkeypatch, fmt):
+    """Two scale-factor directories that share a basename get their
+    own at-rest copy: building the second entry must not overwrite the
+    copy the first entry's lazy plan reads."""
+    from miba_2023_capstone_rb_nlp_spark import catalog
+    from miba_2023_capstone_rb_nlp_spark.suite import REGISTRY, load_suite
+
+    load_suite()
+    build = REGISTRY[f"events_{fmt}_roundtrip"].fn
+    monkeypatch.setattr(
+        catalog, "warehouse_dir",
+        lambda *parts: os.path.join(str(tmp_path), "wh", *parts),
+    )
+    plans = []
+    for root, n in (("a", 3), ("b", 5)):
+        sf = tmp_path / root / "sf"
+        sf.mkdir(parents=True)
+        rows = [("click", i, float(i)) for i in range(n)]
+        spark.createDataFrame(rows, SCHEMA).write.parquet(str(sf / "events.parquet"))
+        plans.append(build(spark, str(sf)))
+    assert [r["n"] for r in plans[0].collect()] == [3]
+    assert [r["n"] for r in plans[1].collect()] == [5]

@@ -202,31 +202,15 @@ def test_priority_ordering():
 
 # Every SURVEY §2 operator's CANONICAL suite entry. The external
 # driver records correctness for exactly the first 50 registry rows,
-# so these must all sit inside that window — round 2 lost 7 of them
-# to silent eviction (VERDICT r2 "What's wrong" #2). Entries NOT here
-# are engine-addition twins whose machinery an in-window sibling
-# re-proves (see _DEPRIORITIZED comments).
+# so these must all sit inside that window unless rotated out.
 #
-# ROTATION (VERDICT r4 #1): core entries may be temporarily demoted —
-# listed in ROTATED_OUT below — to let never-driver-checked entries
-# earn evidence. test_rotated_out_entries_have_driver_evidence makes
-# the precondition executable: only entries hash-green in ≥2 prior
-# CORRECTNESS_r*.json rounds may rotate out.
+# Rotation policy (stated in suite/__init__.py): ROTATED_OUT holds the
+# current clause-(a) demotions — each must be hash-green in >=2
+# CORRECTNESS_r*.json rounds — and ROTATED_OUT_FRESH the clause-(b)
+# ones, mapped to the round they were demoted in. The tests below make
+# both clauses executable; the round-by-round history is in git.
 DRIVER_WINDOW = 50
 ROTATED_OUT = {
-    # ============ round-14 state (VERDICT r13 next-round #1) ======
-    # The r13 window went 50/50 hash-green (eighth consecutive
-    # fully-green round), so every r13-green entry except the
-    # flagship rotated out via clause (a); the window now holds the
-    # R14 slate (the 5 r10-cohort leftovers first — the registry's
-    # only pre-r11 driver evidence — then the clause-(b) witness trio
-    # owed their 2nd solo green, then the first 41 of the r12-demoted
-    # cohort). The sets below are the CURRENT demotions (history in
-    # git). Machinery siblings for each are named in
-    # suite/__init__.py's _DEPRIORITIZED comments.
-    # -- the r13 window, demoted in r14 (>=2 greens each: the 8
-    # -- r9-cohort returnees r9+r13, the 41 r10-cohort returnees
-    # -- r10+r13) --
     "salted_agg_priority_revenue",
     "events_tumbling_hourly",
     "events_json_value_counts",
@@ -276,8 +260,6 @@ ROTATED_OUT = {
     "knn_int8_rerank",
     "knn_ivf_pruned",
     "line_dedup_rebuild",
-    # -- the r12 window, demoted in r13 (>=3 greens each: the r8
-    # -- cohort r1-r4/r8+r12, the r<=6+r9 first half r5/r6/r9+r12) --
     "pricing_summary",
     "region_revenue",
     "order_priority_semijoin",
@@ -326,8 +308,6 @@ ROTATED_OUT = {
     "top_orders_per_customer",
     "order_cube_revenue",
     "customer_order_frames",
-    # -- the 5 r12-demoted backfill leftovers (greens r1-r4+r8+r11;
-    # -- promote in r15, right after wizard_full_chain) --
     "sentiment_distinct_join",
     "bpe_token_stats",
     "bm25_topk",
@@ -335,24 +315,10 @@ ROTATED_OUT = {
     "winnowing_fingerprints",
 }
 
-# Round-6 policy amendment, clause (b): an entry may also rotate out
-# if it was driver-green in the round IMMEDIATELY BEFORE its demotion
-# — the freshest evidence an entry can have (round 5 debuted 41
-# entries at once; the ≥2-green population alone cannot free enough
-# slots to rotate the r1/r2 tail back in). Maps entry → the round it
-# was demoted IN, so the executable precondition ("green in round
-# N-1") stays checkable forever, not just while N-1 is the latest
-# artifact. Rows-only entries (no oracle) satisfy it with a recorded
-# rows-only pass.
 ROTATED_OUT_FRESH = {
-    # wizard_full_chain's witness oracle (commit 5757eb4, mid-r11)
-    # earned its FIRST driver hash-green in r12 — one green round, so
-    # clause (a) cannot demote it; clause (b) can (green in the round
-    # immediately before its r13 demotion). Its witness battery stays
-    # mutation-tested in tests/test_ml_plumbing.py and its stage
-    # plans pinned in tests/test_plans.py. It returns in r15 at the
-    # head of the slate (the kmeans/pca/approx trio, demoted the same
-    # way in r12, returned on schedule in r14).
+    # first driver hash-green in r12; its witness battery stays
+    # mutation-tested in tests/test_ml_plumbing.py and its stage plans
+    # pinned in tests/test_plans.py
     "wizard_full_chain": 13,
 }
 CORE_ENTRIES = {
@@ -419,18 +385,11 @@ def test_core_entries_inside_driver_window():
         f"checked window: {sorted(missing)} — adding a new entry requires "
         "demoting a twin via _DEPRIORITIZED"
     )
-    # entries that must sit in the window this round (the R14 slate,
-    # VERDICT r13 next-round #1)
+    # entries that must sit in the window: the current _PRIORITIZED slate
     promoted = {
-        # the 5 r10-cohort leftovers — the registry's only pre-r11
-        # driver evidence (last green r10), promoted FIRST...
         "lineitem_unpivot_stats", "orders_merge_bucketed",
         "orders_upsert_merge", "part_affinity_topk", "part_pagerank",
-        # ...the clause-(b) witness trio owed their 2nd solo green
-        # since the r12 demotion (single r11 green each)...
         "kmeans_clusters", "pca_coords", "approx_distinct_parts",
-        # ...and the first 41 of the 46-entry r12-demoted cohort
-        # (last green r11), list order
         "part_price_skyline", "phrase_match_docs",
         "prefix_jaccard_pairs", "price_decile_histogram",
         "quality_representative_dedup", "retention_cohorts",
